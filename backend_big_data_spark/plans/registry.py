@@ -12,11 +12,15 @@ identical output types. Value parity rules used throughout:
 - int widths are cast explicitly (year/month/hour/rank → int32) because
   Spark and DuckDB default to different widths;
 - every ordering that feeds row_number/limit includes a unique tie-break key.
+
+Registration only records the pair. :func:`validate_oracles` type-checks
+every oracle against empty DuckDB tables of the driver's schemas (the
+HUGEINT rule included); the default test tier and ``tools/driver_sim.py``
+run it, so importing the plans needs no DuckDB.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,7 +32,7 @@ ORACLES: dict[str, str] = {}
 
 #: DuckDB column DDL of the driver's test tables (matches DESCRIBE over the
 #: sf* parquet files). Oracle validation type-checks against EMPTY tables
-#: with these schemas — no data dependency, runs at import.
+#: with these schemas — no data dependency.
 _TABLE_DDL = {
     "region": '"r_regionkey" INTEGER, "r_name" VARCHAR',
     "nation": '"n_nationkey" INTEGER, "n_name" VARCHAR, "n_regionkey" INTEGER',
@@ -58,25 +62,13 @@ def _oracle_validator():
     return _VALIDATOR
 
 
-#: Escape hatch for environments without DuckDB or without the photo test
-#: fixture (the photo oracles read tests/data/photos.parquet, so DESCRIBE
-#: touches that file at import): set SPARK_GRAFT_SKIP_ORACLE_VALIDATION=1
-#: to register without the import-time type-check (the pytest sweep and the
-#: driver gate still validate at run time).
-_SKIP_VALIDATION = os.environ.get("SPARK_GRAFT_SKIP_ORACLE_VALIDATION") == "1"
-
-
 def _validate_oracle(name: str, sql: str) -> None:
-    """Type-check the oracle at REGISTRATION: it must parse/resolve against
-    the driver's table schemas, and no output column may be HUGEINT /
-    UHUGEINT — DuckDB widens SUM(INTEGER) to HUGEINT, which pandas turns
-    into float64/object while Spark emits BIGINT, a silent value-hash
-    mismatch at the external gate. This bit three queries across rounds
-    (events_daily_pivot, photo_top_owners, photo_owner_profiles); failing
-    at import beats failing at the next driver run. The pytest sweep
-    (test_oracle_parity) re-checks against the REAL parquet schemas."""
-    if _SKIP_VALIDATION:
-        return
+    """Type-check one oracle: it must parse/resolve against the driver's
+    table schemas, and no output column may be HUGEINT / UHUGEINT —
+    DuckDB widens SUM(INTEGER) to HUGEINT, which pandas turns into
+    float64/object while Spark emits BIGINT, a silent value-hash mismatch
+    at the external gate. This bit three queries across rounds
+    (events_daily_pivot, photo_top_owners, photo_owner_profiles)."""
     try:
         desc = _oracle_validator().execute(
             f"DESCRIBE ({sql.rstrip().rstrip(';')})"
@@ -95,15 +87,23 @@ def _validate_oracle(name: str, sql: str) -> None:
         )
 
 
+def validate_oracles(oracles: dict[str, str] | None = None) -> None:
+    """Type-check every registered oracle (or the given ``name → sql``
+    mapping); raises ``ValueError`` for the first that fails
+    :func:`_validate_oracle`. Run by the default test tier and at the
+    start of ``tools/driver_sim.py``, never at import: a serving process
+    needs neither DuckDB nor the photo fixture (the photo oracles read
+    ``tests/data/photos.parquet``, so DESCRIBE touches that file)."""
+    for name, sql in (ORACLES if oracles is None else oracles).items():
+        _validate_oracle(name, sql)
+
+
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a named query; ``oracle=None`` means non-SQL-expressible
-    (driver records a weaker rows-only check). SQL oracles are validated
-    at registration (see :func:`_validate_oracle`)."""
+    (driver records a weaker rows-only check). SQL oracles are type-checked
+    by :func:`validate_oracles`, not here."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if oracle is not None:
-            _validate_oracle(name, oracle)  # before ANY registration: a bad
-            # oracle must not leave a half-registered rows-only query behind
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle

@@ -394,7 +394,7 @@ def events_user_kmv_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]:
             f.result()
 
-    sidecar = read_kmv_sidecar(spark, sdir)
+    sidecar = read_kmv_sidecar(spark, sdir, "event_type string")
     merged = kmv_merged_readout(sidecar, ["event_type"], k=32)
     n_batches = sidecar.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_batches")
@@ -828,7 +828,7 @@ def events_user_kmv_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]:
             f.result()
 
-    sidecar = read_kmv_sidecar(spark, sdir).where(
+    sidecar = read_kmv_sidecar(spark, sdir, "event_type string").where(
         F.col("batch").isin(1, 2)  # the window: newest two ingest batches
     )
     merged = kmv_merged_readout(sidecar, ["event_type"], k=32)

@@ -18,6 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 #: All tables the harness provides (TESTDATA.md).
@@ -105,9 +106,74 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+#: Footer key under which Spark records the schema it wrote. Such files
+#: can carry Spark-only types (char/varchar, field metadata), so Spark's
+#: own inference reads them.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_type_ok(t) -> bool:
+    """Arrow types that ``from_arrow_schema`` maps to the same Spark type
+    as Spark's parquet inference: signed ints, floats, bool, strings,
+    date, decimal128, µs timestamps, and lists/structs of those. Other
+    timestamp units (NANOS, INT96 read as ns), unsigned ints,
+    dictionaries and binary are left to Spark."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        return t.unit == "us"
+    if pa.types.is_list(t):
+        return _footer_type_ok(t.value_type)
+    if pa.types.is_struct(t):
+        return all(_footer_type_ok(t.field(i).type) for i in range(t.num_fields))
+    return (
+        pa.types.is_boolean(t)
+        or pa.types.is_signed_integer(t)
+        or pa.types.is_float32(t)
+        or pa.types.is_float64(t)
+        or pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+        or pa.types.is_date32(t)
+        or pa.types.is_decimal128(t)
+    )
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """Spark schema of a local parquet file read from its footer on the
+    driver (under a millisecond), or None where Spark's own
+    inference must decide: not a local file, an unreadable footer, a
+    Spark-written file, or a type outside :func:`_footer_type_ok`."""
+    if not os.path.isfile(path):
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    try:
+        arrow = pq.read_schema(path)
+    except (OSError, pa.ArrowException):
+        return None
+    if _SPARK_ROW_METADATA in (arrow.metadata or {}):
+        return None
+    if not all(_footer_type_ok(f.type) for f in arrow):
+        return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one table. Filters/projections applied by callers
     push down into this scan (verify with ``df.explain`` → PushedFilters).
+
+    Schema resolution: a local parquet file's schema is read from its
+    footer on the driver (pyarrow ``read_schema`` → ``from_arrow_schema``,
+    timestamps without a zone as TIMESTAMP_NTZ exactly when
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` says so) and passed to
+    the reader, so a load runs no Spark job. The footer is read on every
+    call: a file rewritten in place is read with its new schema. Spark's
+    own inference (one job per call) is the fallback for any path that is
+    not a local file and for files whose types the footer route does not
+    map identically (:func:`_footer_schema`).
 
     Timestamp normalization: the harness parquet has carried ``events.ts``
     as TIMESTAMP(NANOS) in one generation (vectorized reader rejects it —
@@ -128,7 +194,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return cached
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if name == "events" and df.schema["ts"].dataType.simpleString() == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     for f in df.schema.fields:

@@ -40,6 +40,12 @@ from pyspark.sql import functions as F
 from backend_big_data_spark.operators.kmv import kmv_estimate, kmv_sketch
 from backend_big_data_spark.sources import fsutil
 
+#: Columns of every sidecar row after the sink's group columns (what
+#: ``kmv_sketch`` emits), then the ``batch`` partition column of the
+#: ``batch=N`` layout. Readers pass it with the group columns' DDL, so a
+#: read infers nothing.
+SIDECAR_COLUMNS = "sketch array<bigint>, n_seen bigint, batch int"
+
 
 def kmv_ingest_sink(
     sidecar_dir: str,
@@ -65,13 +71,17 @@ def kmv_ingest_sink(
 
 
 def read_kmv_sidecar(
-    spark: SparkSession, sidecar_dir: str
+    spark: SparkSession, sidecar_dir: str, group_schema: str
 ) -> DataFrame | None:
-    """All per-batch sketch rows, or None before the first batch."""
+    """All per-batch sketch rows, or None before the first batch.
+    ``group_schema`` is the DDL of the sink's group columns (for example
+    ``"event_type string"``); the rest of the schema is
+    :data:`SIDECAR_COLUMNS`."""
     names = fsutil.list_subdirs(spark, sidecar_dir, prefix="batch=")
     if not names:
         return None
-    return spark.read.option("basePath", sidecar_dir).parquet(
+    reader = spark.read.schema(f"{group_schema}, {SIDECAR_COLUMNS}")
+    return reader.option("basePath", sidecar_dir).parquet(
         *[os.path.join(sidecar_dir, n) for n in names]
     )
 

@@ -329,31 +329,32 @@ def _emit(payload: dict) -> None:
         # child of _run_children: the parent parses this process's LAST
         # stdout line as the complete per-run table — no abridged line.
         return
-    # The recording harness keeps a 2000-BYTE stdout tail (measured:
-    # every BENCH_r{09,10,11}.json carries parsed=None with the full
-    # line truncated mid-dict — the per-query table outgrew the window
-    # at ~60 rows and the official record has silently depended on
-    # BENCH_FULL.json since). The LAST line printed is therefore an
-    # ABRIDGED payload guaranteed to fit: headline metric + the slowest
-    # rows that fit a 1.5 KiB budget + an explicit omission count and a
-    # pointer to the complete table. A tail-window parse of the last
-    # complete line now always succeeds.
-    slowest = sorted(
-        line.get("queries", {}).items(), key=lambda kv: -kv[1]
-    )
+    print(json.dumps(_abridged(line), separators=(",", ":")))
+
+
+def _abridged(line: dict) -> dict:
+    """The LAST line printed: the recording harness keeps a 2000-BYTE
+    stdout tail (measured: every BENCH_r{09,10,11}.json carries
+    parsed=None with the full line truncated mid-dict — the per-query
+    table outgrew the window at ~60 rows), so this payload is guaranteed
+    to fit: headline metric + the rows that fit a 1.5 KiB budget, taken
+    in the fixed ``HEADLINE`` order (the same row names on every run,
+    whatever its timings) + an explicit omission count and a pointer to
+    the complete table."""
+    queries = line.get("queries", {})
+    ordered = [n for n in HEADLINE if n in queries]
+    ordered += [n for n in queries if n not in HEADLINE]
     abridged = {k: v for k, v in line.items() if k != "queries"}
-    abridged["full_table"] = tag
     kept: dict = {}
-    for name, sec in slowest:
-        kept[name] = sec
+    for name in ordered:
+        kept[name] = queries[name]
         abridged["queries"] = kept
-        abridged["queries_omitted"] = len(slowest) - len(kept)
+        abridged["queries_omitted"] = len(ordered) - len(kept)
         if len(json.dumps(abridged, separators=(",", ":"))) > 1536:
             del kept[name]
-            abridged["queries"] = kept
-            abridged["queries_omitted"] = len(slowest) - len(kept)
+            abridged["queries_omitted"] = len(ordered) - len(kept)
             break
-    print(json.dumps(abridged, separators=(",", ":")))
+    return abridged
 
 
 def _run_children() -> None:

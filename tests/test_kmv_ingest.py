@@ -40,6 +40,10 @@ def _sink_batches(spark, sdir, rows, n_batches=3):
     return df
 
 
+def _sidecar(spark, sdir):
+    return read_kmv_sidecar(spark, sdir, "g string")
+
+
 def _readout_map(df):
     return {r["g"]: (list(r["sketch"]), r["approx_distinct"]) for r in df.collect()}
 
@@ -47,7 +51,7 @@ def _readout_map(df):
 def test_merged_readout_equals_single_pass_sketch(spark, tmp_path):
     sdir = str(tmp_path / "kmv")
     df = _sink_batches(spark, sdir, _events(60))
-    merged = kmv_merged_readout(read_kmv_sidecar(spark, sdir), ["g"], k=K)
+    merged = kmv_merged_readout(_sidecar(spark, sdir), ["g"], k=K)
     direct = kmv_sketch(df, ["g"], F.col("v"), k=K).withColumn(
         "approx_distinct", kmv_estimate(F.col("sketch"), k=K)
     )
@@ -60,14 +64,14 @@ def test_replay_is_idempotent(spark, tmp_path):
     sdir = str(tmp_path / "kmv")
     df = _sink_batches(spark, sdir, _events(60))
     before = _readout_map(
-        kmv_merged_readout(read_kmv_sidecar(spark, sdir), ["g"], k=K)
+        kmv_merged_readout(_sidecar(spark, sdir), ["g"], k=K)
     )
     # at-least-once: batch 1 fires again
     kmv_ingest_sink(sdir, ["g"], F.col("v"), k=K)(
         df.filter(F.col("v") % 3 == 1), 1
     )
     after = _readout_map(
-        kmv_merged_readout(read_kmv_sidecar(spark, sdir), ["g"], k=K)
+        kmv_merged_readout(_sidecar(spark, sdir), ["g"], k=K)
     )
     assert before == after
 
@@ -79,7 +83,7 @@ def test_small_set_stays_exact_through_merge(spark, tmp_path):
     sdir = str(tmp_path / "kmv")
     _sink_batches(spark, sdir, _events(60))
     got = _readout_map(
-        kmv_merged_readout(read_kmv_sidecar(spark, sdir), ["g"], k=K)
+        kmv_merged_readout(_sidecar(spark, sdir), ["g"], k=K)
     )
     assert got["b"][1] == 5
 
@@ -104,7 +108,7 @@ def test_recount_after_erasure_matches_surviving_corpus(spark, tmp_path):
         k=K,
     )
     assert rebuilt == ["batch=0", "batch=1", "batch=2"]
-    merged = kmv_merged_readout(read_kmv_sidecar(spark, sdir), ["g"], k=K)
+    merged = kmv_merged_readout(_sidecar(spark, sdir), ["g"], k=K)
     direct = kmv_sketch(surviving, ["g"], F.col("v"), k=K).withColumn(
         "approx_distinct", kmv_estimate(F.col("sketch"), k=K)
     )
@@ -114,4 +118,17 @@ def test_recount_after_erasure_matches_surviving_corpus(spark, tmp_path):
 
 
 def test_read_before_first_batch_is_none(spark, tmp_path):
-    assert read_kmv_sidecar(spark, str(tmp_path / "empty")) is None
+    assert _sidecar(spark, str(tmp_path / "empty")) is None
+
+
+def test_sidecar_read_schema_equals_inferred(spark, tmp_path):
+    """The reader's given schema is what the sink writes: the same
+    columns, types and rows as Spark's inference over the directory."""
+    sdir = str(tmp_path / "kmv")
+    _sink_batches(spark, sdir, _events(30))
+    given = _sidecar(spark, sdir)
+    inferred = spark.read.option("basePath", sdir).parquet(
+        *[str(p) for p in sorted((tmp_path / "kmv").glob("batch=*"))]
+    )
+    assert given.schema == inferred.schema
+    assert sorted(map(repr, given.collect())) == sorted(map(repr, inferred.collect()))

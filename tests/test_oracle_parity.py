@@ -86,34 +86,67 @@ def test_no_oracle_emits_hugeint(duck):
 
 
 def test_registration_rejects_hugeint_oracle():
-    """The HUGEINT sweep also runs at REGISTRATION time: an oracle whose
-    output widens to HUGEINT (uncast SUM over INTEGER) must fail at import,
-    not at the next driver gate."""
-    import pytest
-
-    from backend_big_data_spark.plans.registry import QUERIES, register
+    """The oracle sweep (``validate_oracles``, run by this tier and by
+    ``tools/driver_sim.py``) rejects an oracle whose output widens to
+    HUGEINT (uncast SUM over INTEGER)."""
+    from backend_big_data_spark.plans.registry import validate_oracles
 
     with pytest.raises(ValueError, match="HUGEINT"):
-        @register(
-            "_bad_hugeint_oracle",
-            oracle="SELECT SUM(p_size) AS s FROM part",
+        validate_oracles(
+            {"_bad_hugeint_oracle": "SELECT SUM(p_size) AS s FROM part"}
         )
-        def bad(spark, sf_dir):  # pragma: no cover - never registered
-            raise AssertionError
-    # validation runs before ANY registration: no half-registered query
-    assert "_bad_hugeint_oracle" not in QUERIES
 
 
 def test_registration_rejects_untypecheckable_oracle():
-    import pytest
-
-    from backend_big_data_spark.plans.registry import QUERIES, register
+    from backend_big_data_spark.plans.registry import validate_oracles
 
     with pytest.raises(ValueError, match="type-check"):
-        @register(
-            "_bad_sql_oracle",
-            oracle="SELECT nope_col FROM part",
-        )
-        def bad(spark, sf_dir):  # pragma: no cover
-            raise AssertionError
-    assert "_bad_sql_oracle" not in QUERIES
+        validate_oracles({"_bad_sql_oracle": "SELECT nope_col FROM part"})
+
+
+def test_every_registered_oracle_type_checks():
+    """The sweep passes over every registration (all of them carry an
+    oracle)."""
+    from backend_big_data_spark.plans.registry import validate_oracles
+
+    assert set(ORACLES) == set(QUERIES)
+    validate_oracles()
+
+
+def test_importing_the_plans_needs_no_duckdb():
+    """Registration records the oracle only: a serving process that
+    imports every plan never loads DuckDB."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, backend_big_data_spark.plans.all_plans; "
+        "print('duckdb' in sys.modules)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "False"
+
+
+def test_driver_sim_stops_before_spark_on_a_bad_oracle(monkeypatch):
+    import importlib.util
+    from pathlib import Path
+
+    from backend_big_data_spark import session
+    from backend_big_data_spark.plans import registry
+
+    path = Path(__file__).resolve().parents[1] / "tools" / "driver_sim.py"
+    spec = importlib.util.spec_from_file_location("driver_sim", path)
+    driver_sim = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(driver_sim)
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark started before the oracle sweep")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setitem(
+        registry.ORACLES, "_bad_hugeint_oracle", "SELECT SUM(p_size) AS s FROM part"
+    )
+    monkeypatch.setattr("sys.argv", ["driver_sim.py"])
+    assert driver_sim.main() == 1

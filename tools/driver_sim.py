@@ -5,7 +5,8 @@ Runs every ``queries()`` entry at an arbitrary scale factor (default the
 driver's sf0.01) on Spark AND its DuckDB oracle, comparing the way the
 driver does: column names sorted, rows order-insensitive, values
 normalised. Prints one line per query plus a failure summary, exit 1 on
-any mismatch.
+any mismatch. Before Spark starts, every registered oracle is
+type-checked (``plans.registry.validate_oracles``); a failure exits 1.
 
 Usage: python tools/driver_sim.py [--sf /root/testdata/sf0.01] [name ...]
 """
@@ -55,7 +56,14 @@ def main() -> int:
     import duckdb
 
     from backend_big_data_spark.plans.all_plans import ORACLES, QUERIES
+    from backend_big_data_spark.plans.registry import validate_oracles
     from backend_big_data_spark.session import get_spark
+
+    try:
+        validate_oracles()
+    except ValueError as exc:
+        print(f"FAILURE: {exc}")
+        return 1
 
     spark = get_spark(app_name="driver-sim", shuffle_partitions=16)
     duck = duckdb.connect()
@@ -117,4 +125,5 @@ def main() -> int:
 
 
 if __name__ == "__main__":
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sys.exit(main())
