@@ -50,10 +50,13 @@ not ports.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backend_big_data_spark.plans.registry import register
+from backend_big_data_spark.session import overlap
 from backend_big_data_spark.sources.catalog import load_table
 
 #: Sample size: rank error O(1/√k) ≈ 3% of n at k=1024.
@@ -382,17 +385,10 @@ def events_user_kmv_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sdir = _tempfile.mkdtemp(prefix="kmv_sidecar_")
     sink = kmv_ingest_sink(sdir, ["event_type"], F.col("user_id"), k=32)
-    # the three batch sinks are independent jobs (disjoint input slices,
-    # disjoint batch=N dirs) — overlap them so the scheduler back-fills
-    # each job's tail (guide §2.6; the linkage-ingest pattern)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=3) as _pool:
-        for f in [
-            _pool.submit(sink, ev.where(F.col("event_id") % 3 == b), b)
-            for b in range(3)
-        ]:
-            f.result()
+    # the batch sinks read disjoint slices into disjoint batch=N dirs
+    overlap(*[
+        partial(sink, ev.where(F.col("event_id") % 3 == b), b) for b in range(3)
+    ])
 
     sidecar = read_kmv_sidecar(spark, sdir, "event_type string")
     merged = kmv_merged_readout(sidecar, ["event_type"], k=32)
@@ -468,15 +464,8 @@ def lineitem_quantile_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdir, [], _key(), F.col("price"), k=_QS_K,
         prefilter=sample_prefilter(bn_min, 4096),
     )
-    # independent batch jobs — overlap (guide §2.6, see events_user_kmv_sidecar)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=3) as _pool:
-        for f in [
-            _pool.submit(sink, li.where(F.col("b") == b), b)
-            for b in range(3)
-        ]:
-            f.result()
+    # the batch sinks read disjoint slices into disjoint batch=N dirs
+    overlap(*[partial(sink, li.where(F.col("b") == b), b) for b in range(3)])
 
     sidecar = read_qsketch_sidecar(spark, sdir)
     # the basePath read surfaces the batch=N partition key as a column
@@ -682,17 +671,11 @@ def doc_bm25_from_bucketed_index(
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     idir = _tempfile.mkdtemp(prefix="bm25_bucketed_")
     sink = bm25_ingest_sink(idir)
-    # the two pre-fold batches are independent jobs (disjoint doc
-    # slices, disjoint batch dirs) — overlap them (guide §2.6, the
-    # part_fuzzy_from_bucketed_index pattern); the fold is dependent
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=2) as _pool:
-        for f in [
-            _pool.submit(sink, docs.where(F.col("doc_id") % 3 == b), b)
-            for b in range(2)
-        ]:
-            f.result()
+    # the two pre-fold batches read disjoint slices into disjoint batch
+    # dirs; the fold depends on both
+    overlap(*[
+        partial(sink, docs.where(F.col("doc_id") % 3 == b), b) for b in range(2)
+    ])
     compact_bm25_index(spark, idir, keep_latest=0, term_buckets=8)
     sink(docs.where(F.col("doc_id") % 3 == 2), 2)  # flat post-fold tail
     return bm25_topk_from_index(
@@ -818,15 +801,10 @@ def events_user_kmv_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sdir = _tempfile.mkdtemp(prefix="kmv_window_")
     sink = kmv_ingest_sink(sdir, ["event_type"], F.col("user_id"), k=32)
-    # independent batch jobs — overlap (guide §2.6, see events_user_kmv_sidecar)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=3) as _pool:
-        for f in [
-            _pool.submit(sink, ev.where(F.col("event_id") % 3 == b), b)
-            for b in range(3)
-        ]:
-            f.result()
+    # the batch sinks read disjoint slices into disjoint batch=N dirs
+    overlap(*[
+        partial(sink, ev.where(F.col("event_id") % 3 == b), b) for b in range(3)
+    ])
 
     sidecar = read_kmv_sidecar(spark, sdir, "event_type string").where(
         F.col("batch").isin(1, 2)  # the window: newest two ingest batches

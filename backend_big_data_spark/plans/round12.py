@@ -29,6 +29,8 @@ LLM-pipeline scope, held to the same oracle discipline as SURVEY §2.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +47,7 @@ from backend_big_data_spark.plans.round7c import (
     _FUZZY_ORACLE as _ROUND7C_FUZZY_ORACLE,
 )
 from backend_big_data_spark.plans.round8 import _TOKS
+from backend_big_data_spark.session import overlap
 from backend_big_data_spark.sources.catalog import load_table
 
 _QGROUPED_SIDECAR_ORACLE = f"""
@@ -115,15 +118,10 @@ def lineitem_quantile_by_flag_sidecar(
         sdir, ["flag"], _key(), F.col("price"), k=_QS_K,
         prefilter=sample_prefilter(cell_min, 4096),
     )
-    # independent batch jobs — overlap (guide §2.6, the linkage pattern)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=3) as _pool:
-        for f in [
-            _pool.submit(sink, li.where(F.col("b") == b).drop("b"), b)
-            for b in range(3)
-        ]:
-            f.result()
+    # the batch sinks read disjoint slices into disjoint batch=N dirs
+    overlap(*[
+        partial(sink, li.where(F.col("b") == b).drop("b"), b) for b in range(3)
+    ])
 
     sidecar = read_qsketch_sidecar(spark, sdir)
     n_batches = sidecar.select(F.countDistinct("batch").alias("nb"))
@@ -183,19 +181,14 @@ def part_fuzzy_from_bucketed_index(
     clean = _entities(spark, sf_dir)
     dirty = _corrupt(clean)
     mdir = _tempfile.mkdtemp(prefix="gram_bucketed_")
-    # the two pre-fold bulk-load batches are independent (disjoint id
-    # slices, disjoint batch dirs) — overlap them (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=2) as _pool:
-        for f in [
-            _pool.submit(
-                seed_master_batch,
-                spark, mdir, clean.where(F.col("id") % 3 == b), b,
-            )
-            for b in range(2)
-        ]:
-            f.result()
+    # the two pre-fold bulk loads write disjoint id slices to disjoint
+    # batch dirs
+    overlap(*[
+        partial(
+            seed_master_batch, spark, mdir, clean.where(F.col("id") % 3 == b), b
+        )
+        for b in range(2)
+    ])
     compact_linkage_master(spark, mdir, keep_latest=0, gram_buckets=8)
     seed_master_batch(
         spark, mdir, clean.where(F.col("id") % 3 == 2), 2
@@ -282,18 +275,15 @@ def part_token_jaccard_from_bucketed_index(
         F.concat_ws(" ", "p_name", "p_brand", "p_type").alias("s"),
     )
     mdir = _tempfile.mkdtemp(prefix="token_bucketed_")
-    # independent pre-fold bulk-load batches — overlap them (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=2) as _pool:
-        for f in [
-            _pool.submit(
-                seed_setsim_master_batch,
-                spark, mdir, part.where(F.col("id") % 3 == b), b,
-            )
-            for b in range(2)
-        ]:
-            f.result()
+    # the two pre-fold bulk loads write disjoint id slices to disjoint
+    # batch dirs
+    overlap(*[
+        partial(
+            seed_setsim_master_batch,
+            spark, mdir, part.where(F.col("id") % 3 == b), b,
+        )
+        for b in range(2)
+    ])
     compact_setsim_master(spark, mdir, keep_latest=0, token_buckets=8)
     seed_setsim_master_batch(
         spark, mdir, part.where(F.col("id") % 3 == 2), 2

@@ -31,6 +31,8 @@ same oracle discipline as SURVEY §2.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +44,7 @@ from backend_big_data_spark.operators.cms import (
 )
 from backend_big_data_spark.operators.pinning import pin_single_evaluation
 from backend_big_data_spark.plans.registry import register
+from backend_big_data_spark.session import overlap
 from backend_big_data_spark.sources.catalog import load_table
 
 #: Sketch geometry for the certified corpus-token queries. Width 1024 at
@@ -220,19 +223,12 @@ def corpus_token_cms_post_erasure(
     tokrows = _token_stream(spark, sf_dir)
     sdir = _tempfile.mkdtemp(prefix="cms_sidecar_")
     sink = cms_ingest_sink(sdir, "tok", depth=_CMS_D, width=_CMS_W)
-    # the three batch sinks are independent jobs (disjoint input slices,
-    # disjoint delta dirs) — overlap them (guide §2.6); the compaction
-    # fold below is the first dependent step
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=3) as _pool:
-        for f in [
-            _pool.submit(
-                sink, tokrows.where(F.col("doc_id") % 3 == b).select("tok"), b
-            )
-            for b in range(3)
-        ]:
-            f.result()
+    # the batch sinks read disjoint slices into disjoint delta dirs; the
+    # compaction fold below is the first dependent step
+    overlap(*[
+        partial(sink, tokrows.where(F.col("doc_id") % 3 == b).select("tok"), b)
+        for b in range(3)
+    ])
     compact_cms_cells(spark, sdir, keep_latest=1)
     retract_from_cms_cells(
         spark,
@@ -335,17 +331,11 @@ def corpus_heavy_hitters_from_cms(
     sink = cms_ingest_sink(
         sdir, "tok", depth=_CMS_D, width=_CMS_W, candidates_k=_HH_CMS_K
     )
-    # independent batch jobs — overlap (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=3) as _pool:
-        for f in [
-            _pool.submit(
-                sink, tokrows.where(F.col("doc_id") % 3 == b).select("tok"), b
-            )
-            for b in range(3)
-        ]:
-            f.result()
+    # the batch sinks read disjoint slices into disjoint delta dirs
+    overlap(*[
+        partial(sink, tokrows.where(F.col("doc_id") % 3 == b).select("tok"), b)
+        for b in range(3)
+    ])
 
     cands = cms_candidate_keys(spark, sdir).select(
         F.col("key").alias("tok")

@@ -7,12 +7,17 @@ and skew-join handling, Arrow for every pandas interchange).
 
 At 100 TB the same code runs unchanged on a real cluster: only ``master`` and
 the memory/shuffle sizing change. Nothing here assumes local mode.
+
+:func:`overlap` is the one way the engine runs independent jobs
+concurrently from the driver.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import SparkSession
 
 #: Shuffle partitions for local test/bench runs. On a 1000-executor cluster
@@ -69,3 +74,34 @@ def get_spark(
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def overlap(*fns: Callable[[], object]) -> list:
+    """Run ``fns`` concurrently, one driver thread each, and return their
+    results in argument order.
+
+    For independent Spark jobs (disjoint inputs, disjoint output dirs):
+    jobs submitted from several driver threads share the executors, so
+    one job's tasks back-fill another's scheduling and commit tail. The
+    threads are ``InheritableThread``s, so every job keeps the caller's
+    job group and local properties; a plain thread pool drops them, and
+    Spark can then not charge the job to its query. Every thread is
+    joined before the first failure (in argument order) is re-raised."""
+    results: list = [None] * len(fns)
+    errors: list = [None] * len(fns)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = fns[i]()
+        except BaseException as e:  # re-raised on the caller's thread
+            errors[i] = e
+
+    threads = [InheritableThread(run, args=(i,)) for i in range(len(fns))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results

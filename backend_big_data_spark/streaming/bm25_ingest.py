@@ -25,16 +25,17 @@ Per micro-batch of (doc_id, text):
 
 Readers union the sidecar dirs (`read_bm25_postings` — postings rows
 need no merge, doc ids are disjoint across batches; `read_bm25_stats`
-keyed-sums). The compactor folds all three in lockstep. Erasure
-(`retract_from_bm25_index`): postings rows are id-keyed, so the purge is
-a journaled filter-rewrite of every postings dir naming an erased id
-(ghost postings matter — tf rows reconstruct an erased document's word
-histogram, so the sidecar purge is part of the erasure guarantee), while
-the one-row stats sidecars are PURE AGGREGATES and follow the lm_ingest
-rebuild-to-match-layout discipline: recount from each surviving
-documents directory, drop orphans. A stale index row a crash leaves
-behind is harmless to correctness claims only once the journal replays —
-hence the same recover-on-entry protocol as the linkage/setsim masters.
+keyed-sums). The compactor folds all three in lockstep.
+
+Erasure (`retract_from_bm25_index`) is one `retraction.journaled`
+request. Postings rows are id-keyed, so every postings dir naming an
+erased id is filter-rewritten (ghost postings matter — tf rows
+reconstruct an erased document's word histogram, so the sidecar purge
+is part of the erasure guarantee). The one-row stats sidecars are PURE
+AGGREGATES, so they are recounted from each surviving documents dir
+(`retraction.recount_sidecars`). A crash leaves the request journaled,
+and the next erasure call replays it before its own; readers do not
+replay, so until then they can serve the erased ids' postings.
 
 Scale shape: per-batch cost is one tokenize + one hash aggregate over
 the BATCH; query cost is a pushed-predicate scan of the postings index
@@ -53,6 +54,13 @@ from pyspark.sql import functions as F
 
 from backend_big_data_spark.sources import fsutil
 from backend_big_data_spark.streaming.linkage_ingest import _read_dirs
+from backend_big_data_spark.streaming.retraction import (
+    dirs_holding,
+    journaled,
+    recount_sidecars,
+    replay,
+    retract_ids,
+)
 from backend_big_data_spark.text.bm25 import (
     bm25_topk_from_postings,
     doc_postings,
@@ -237,7 +245,7 @@ def compact_bm25_index(
     the fold stay flat until the next fold (the reader handles the mixed
     layout). Erasure on a bucketed index goes through
     `retract_from_bm25_index` unchanged — it folds a flat tail first so
-    the purge probe sees one consistent layout."""
+    the postings rewrite publishes one consistent layout."""
     from backend_big_data_spark.text.sampling import stable_hash
     from backend_big_data_spark.streaming.maintenance import _fold
 
@@ -294,138 +302,59 @@ def _bm25_journal_path(index_dir: str) -> str:
     return os.path.join(index_dir, "_retract_bm25_journal.json")
 
 
-def _recount_stats(
-    spark: SparkSession, index_dir: str, doc_dirs: list[str]
-) -> list[str]:
-    """Rebuild-to-match-layout for the aggregate stats sidecar (the
-    lm_ingest erasure discipline, single-sidecar form): recount
-    stats/batch=N from each AFFECTED documents dir's current
-    (post-removal) rows; orphaned stats dirs — docs dir folded away
-    before the sidecar fold ran — are deleted after their covering
-    folded dir (from `maintenance.fold_history`) is recounted, falling
-    back to recounting every docs dir when no cover explains them."""
-    from backend_big_data_spark.streaming.maintenance import fold_history
+def _bm25_erasure(spark: SparkSession, index_dir: str):
+    """``apply`` of the BM25 erasure request ``{"ids", "dirs"}``: row
+    removal from the corpus of record, filter-rewrite of every postings
+    dir naming an erased id (in the index's own layout), stats recounted
+    from the surviving docs dirs."""
 
-    s_base = os.path.join(index_dir, "stats")
-    doc_names = set(fsutil.list_subdirs(spark, index_dir, prefix="batch="))
-    targets = set(doc_dirs) & doc_names
-    cover = {
-        orig: f"batch={pub}"
-        for pub, origs in fold_history(spark, index_dir, "batch").items()
-        for orig in origs
-    }
-    side_names = set(fsutil.list_subdirs(spark, s_base, prefix="batch="))
-    orphans = sorted(side_names - doc_names)
-    for name in orphans:
-        covering = cover.get(int(name.split("=", 1)[1]))
-        if covering is not None and covering in doc_names:
-            targets.add(covering)
-        else:
-            targets = set(doc_names)  # unexplained orphan: recount all
-    rebuilt = []
-    for name in sorted(targets):
-        docs_path = os.path.join(index_dir, name)
-        if not fsutil.exists(spark, docs_path):
-            continue
-        tmp = os.path.join(s_base, "_recount_" + name.replace("=", "_"))
-        _batch_stats(spark.read.parquet(docs_path)).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        fsutil.delete(spark, os.path.join(s_base, name))
-        # Checked rename: a silent Hadoop rename failure here, after the
-        # old stats dir is deleted, would leave the sidecar permanently
-        # missing this batch row (__n/__sum_dl undercount) once the
-        # journal is cleared. Raising keeps the retraction journal
-        # pending so the next recover_bm25_retraction replays the recount.
-        fsutil.rename_checked(spark, tmp, os.path.join(s_base, name))
-        rebuilt.append(f"stats/{name}")
-    # orphans go LAST (transient over-count beats a loss window)
-    for name in orphans:
-        fsutil.delete(spark, os.path.join(s_base, name))
-    return rebuilt
+    def apply(req: dict) -> dict:
+        out = retract_ids(spark, index_dir, req["ids"], drop_band_sidecar=False)
+        purged = retract_ids(
+            spark,
+            os.path.join(index_dir, "postings"),
+            req["ids"],
+            partition_by=(
+                ("__tb",) if _term_bucket_count(spark, index_dir) else ()
+            ),
+            drop_band_sidecar=False,
+        )
+        out["posting_dirs_rewritten"] = purged["dirs_rewritten"]
+        out["posting_rows_removed"] = purged["rows_removed"]
+        out["stats_dirs_rewritten"] = recount_sidecars(
+            spark, index_dir, req["dirs"], {"stats": _batch_stats}
+        )
+        return out
 
-
-def _affected_dirs(spark: SparkSession, index_dir: str, ids: list) -> list[str]:
-    """The ``batch=N`` documents dirs currently holding any of ``ids`` —
-    probed BEFORE removal so the journaled replay recounts the same
-    dirs (column-pruned id scan, one metadata-light job)."""
-    names = fsutil.list_subdirs(spark, index_dir, prefix="batch=")
-    if not names:
-        return []
-    probe = spark.read.option("basePath", index_dir).parquet(
-        *[os.path.join(index_dir, n) for n in names]
-    )
-    lits = [F.lit(i) for i in ids]
-    return sorted(
-        f"batch={r['batch']}"
-        for r in probe.filter(F.col("doc_id").isin(lits))
-        .select("batch")
-        .distinct()
-        .collect()
-    )
+    return apply
 
 
 def recover_bm25_retraction(spark: SparkSession, index_dir: str) -> None:
-    """Roll a crashed `retract_from_bm25_index` forward (idempotent;
-    called on entry): the journal records the request AND the affected
-    docs dirs before any mutation, and clears only after the postings
-    purge and stats recount complete — ghost tf rows reconstruct an
-    erased document's word histogram, so the index purge is part of the
-    erasure guarantee."""
-    from backend_big_data_spark.streaming.retraction import retract_ids
-
-    raw = fsutil.read_text(spark, _bm25_journal_path(index_dir))
-    if raw is None:
-        return
-    meta = json.loads(raw)
-    retract_ids(spark, index_dir, meta["ids"], drop_band_sidecar=False)
-    retract_ids(
-        spark,
-        os.path.join(index_dir, "postings"),
-        meta["ids"],
-        partition_by=(
-            ("__tb",) if _term_bucket_count(spark, index_dir) else ()
-        ),
-        drop_band_sidecar=False,
-    )
-    _recount_stats(spark, index_dir, meta["dirs"])
-    fsutil.delete(spark, _bm25_journal_path(index_dir), recursive=False)
+    """Replay a crashed `retract_from_bm25_index` (idempotent; called on
+    entry)."""
+    replay(spark, _bm25_journal_path(index_dir), _bm25_erasure(spark, index_dir))
 
 
 def retract_from_bm25_index(
     spark: SparkSession, index_dir: str, ids: list
 ) -> dict:
-    """Erase documents from the maintained BM25 index: journaled row
-    removal from the corpus of record, filter-rewrite of every postings
-    dir naming an erased id (id-keyed sidecar → the linkage/setsim purge
-    primitive), stats recounted from the surviving layout (aggregate
-    sidecar → the lm_ingest recount primitive)."""
-    from backend_big_data_spark.streaming.retraction import retract_ids
+    """Erase documents from the maintained BM25 index under
+    `retraction.journaled`. The request journals the ids and the docs
+    dirs holding them, probed before any mutation (afterwards the
+    evidence is gone), so a replay recounts the same stats dirs."""
 
-    recover_bm25_retraction(spark, index_dir)
-    bucketed = _term_bucket_count(spark, index_dir)
-    if bucketed:
-        # A bucketed index may carry a FLAT post-fold tail; the purge's
-        # partition-discovered probe needs one consistent layout, so
-        # fold the tail into the bucketed bulk first (sticky width —
-        # cheap: erasure is rare, the tail is small by construction).
-        compact_bm25_index(spark, index_dir, keep_latest=0)
-    dirs = _affected_dirs(spark, index_dir, ids)
-    fsutil.write_text_atomic(
-        spark,
-        _bm25_journal_path(index_dir),
-        json.dumps({"ids": list(ids), "dirs": dirs}),
+    def plan() -> dict:
+        if _term_bucket_count(spark, index_dir):
+            # A bucketed index may carry a FLAT post-fold tail; the
+            # postings rewrite publishes in one layout, so fold the tail
+            # into the bucketed bulk first (sticky width — cheap: erasure
+            # is rare, the tail is small by construction).
+            compact_bm25_index(spark, index_dir, keep_latest=0)
+        return {
+            "ids": list(ids),
+            "dirs": sorted(dirs_holding(spark, index_dir, ids, "doc_id")),
+        }
+
+    return journaled(
+        spark, _bm25_journal_path(index_dir), plan, _bm25_erasure(spark, index_dir)
     )
-    out = retract_ids(spark, index_dir, ids, drop_band_sidecar=False)
-    purged = retract_ids(
-        spark,
-        os.path.join(index_dir, "postings"),
-        ids,
-        partition_by=(("__tb",) if bucketed else ()),
-        drop_band_sidecar=False,
-    )
-    out["posting_dirs_rewritten"] = purged["dirs_rewritten"]
-    out["posting_rows_removed"] = purged["rows_removed"]
-    out["stats_dirs_rewritten"] = _recount_stats(spark, index_dir, dirs)
-    fsutil.delete(spark, _bm25_journal_path(index_dir), recursive=False)
-    return out

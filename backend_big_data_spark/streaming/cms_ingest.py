@@ -22,8 +22,9 @@ replayable in ANSI SQL, so the maintained state is hash-oracle-certified
 
 Erasure: cells are ADDITIVE, so the CM sketch joins token counts as the
 second exactly-subtractable family — `retract_from_cms_cells` appends
-one journaled negate-delta (`streaming/negdelta`, the drift-counts
-choreography verbatim) holding the erased slice's cells with ``n``
+one negate-delta through `streaming/negdelta` (committed by the shared
+`retraction.publish_dir`, as the drift counts are) holding the erased
+slice's cells with ``n``
 negated; every reader's keyed sum then lands on exactly the surviving
 corpus's sketch. No batch recount (the KMV/qsketch story), no corpus
 rescan. Over-erasure drives a merged cell negative, which every read
@@ -58,8 +59,8 @@ def _meta_path(cells_dir: str) -> str:
 
 
 #: Serializes the meta check-and-write: batch sinks are independent jobs
-#: (disjoint delta dirs) and may legally run OVERLAPPED from a driver
-#: thread pool (guide §2.6 — the round-12 certificate queries do), but
+#: (disjoint delta dirs) and may legally run OVERLAPPED from driver
+#: threads (`session.overlap` — the round-12 certificate queries do), but
 #: the geometry sidecar is one shared file, and two first-writers racing
 #: through write_text_atomic's fixed tmp path lose the tmp from under
 #: each other (measured: chmod ENOENT on _cms_meta.json.tmp). The race
@@ -176,8 +177,7 @@ def cms_candidate_keys(spark: SparkSession, cells_dir: str) -> DataFrame | None:
 
 def recover_cms_retraction(spark: SparkSession, cells_dir: str) -> None:
     """Roll a crashed `retract_from_cms_cells` forward (idempotent;
-    called on entry by every reader) — shared commit-point choreography,
-    `streaming/negdelta`."""
+    called on entry by every reader) — `streaming/negdelta`."""
     negdelta.recover_negdelta(spark, cells_dir, family="cms")
 
 

@@ -17,10 +17,12 @@ metric row (idempotent, like the ingest sinks).
 
 Erasure (round 12): counts are the one maintained family that is exactly
 SUBTRACTABLE, so retraction needs no recount — `retract_from_drift_counts`
-appends one journaled NEGATE-DELTA directory (``delta=-K``, the erased
-documents' token counts with ``n`` negated; streaming batch ids are
+appends one NEGATE-DELTA directory through `streaming/negdelta`, whose
+commit point is the shared `retraction.publish_dir` (every reader replays
+a committed delta on entry). The delta is ``delta=-K``: the erased
+documents' token counts with ``n`` negated. Streaming batch ids are
 always ≥ 0, so negative ids can never collide with a replayed batch's
-own overwrite) and every reader's keyed sum lands on exactly the
+own overwrite, and every reader's keyed sum lands on exactly the
 surviving corpus's counts. The negate delta folds through
 `compaction <streaming.maintenance.compact_drift_counts>` like any other
 delta (sum semantics). `read_corpus_counts` drops fully-erased tokens
@@ -38,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backend_big_data_spark.functions.textfns import tokens
+from backend_big_data_spark.session import overlap
 from backend_big_data_spark.sources import fsutil
 from backend_big_data_spark.streaming import negdelta
 
@@ -171,27 +174,16 @@ def drift_monitor_sink(
         # outputs of the same (persisted) batch counts — the NEXT
         # batch's corpus merge is the only reader of delta=N, and
         # read_corpus_counts froze ITS delta listing above, before
-        # either job starts. Overlap the two jobs so the delta write
-        # back-fills the metric aggregation's straggler tail (guide
-        # §2.6; the block-level cache lock on `bc` keeps the shared
-        # token count computed once).
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        with _TPE(max_workers=2) as _pool:
-            jobs = [
-                _pool.submit(
-                    lambda: metric.write.mode("overwrite").parquet(
-                        f"{metrics_dir}/batch={batch_id}"
-                    )
-                ),
-                _pool.submit(
-                    lambda: bc.write.mode("overwrite").parquet(
-                        f"{counts_dir}/delta={batch_id}"
-                    )
-                ),
-            ]
-            for j in jobs:
-                j.result()
+        # either job starts. The block-level cache lock on `bc` keeps
+        # the shared token count computed once.
+        overlap(
+            lambda: metric.write.mode("overwrite").parquet(
+                f"{metrics_dir}/batch={batch_id}"
+            ),
+            lambda: bc.write.mode("overwrite").parquet(
+                f"{counts_dir}/delta={batch_id}"
+            ),
+        )
         bc.unpersist()
         if auto_compact_every is not None:
             n_deltas = len(
@@ -232,7 +224,7 @@ def read_drift_metrics(spark: SparkSession, metrics_dir: str) -> DataFrame:
 def recover_drift_retraction(spark: SparkSession, counts_dir: str) -> None:
     """Roll a crashed `retract_from_drift_counts` forward (idempotent;
     called on entry by every reader and by the retraction itself) — the
-    shared commit-point choreography, `streaming/negdelta`."""
+    `streaming/negdelta`."""
     negdelta.recover_negdelta(spark, counts_dir, family="drift")
 
 

@@ -25,9 +25,9 @@ ANSI SQL, so the maintained state itself is hash-oracle-certified
 
 Erasure note: KMV sketches are NOT subtractable (removing a value whose
 hash sits in the bottom-k needs the evicted k+1-th hash). The erasure
-path is therefore the BM25 stats discipline: journaled per-batch
-recount from the surviving source rows — :func:`recount_kmv_sidecar`,
-exercised by the retraction tests.
+path is therefore a per-batch recount from the surviving source rows —
+:func:`recount_kmv_sidecar`, one `retraction.rewrite_dir` per batch,
+run by the caller under `retraction.journaled`.
 """
 
 from __future__ import annotations
@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from backend_big_data_spark.operators.kmv import kmv_estimate, kmv_sketch
 from backend_big_data_spark.sources import fsutil
+from backend_big_data_spark.streaming.retraction import rewrite_dir
 
 #: Columns of every sidecar row after the sink's group columns (what
 #: ``kmv_sketch`` emits), then the ``batch`` partition column of the
@@ -123,18 +124,15 @@ def recount_kmv_sidecar(
     k: int = 64,
 ) -> list[str]:
     """Erasure support (sketches are not subtractable): rewrite the
-    named batches' sketch rows from their SURVIVING source rows — the
-    BM25 ``_recount_stats`` discipline (tmp + checked rename, caller
-    journals). Returns the rewritten directory names."""
+    named batches' sketch rows from their SURVIVING source rows
+    (`retraction.rewrite_dir`; the caller journals). Returns the
+    rewritten directory names."""
     rebuilt = []
     for batch_id, surviving in sorted(batch_sources.items()):
         name = f"batch={batch_id}"
-        tmp = os.path.join(sidecar_dir, "_recount_" + name.replace("=", "_"))
-        kmv_sketch(surviving, group_cols, value, k=k).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        fsutil.delete(spark, os.path.join(sidecar_dir, name))
-        fsutil.rename_checked(spark, tmp, os.path.join(sidecar_dir, name))
+        rewrite_dir(
+            spark, sidecar_dir, name, kmv_sketch(surviving, group_cols, value, k=k)
+        )
         rebuilt.append(name)
     return rebuilt
 

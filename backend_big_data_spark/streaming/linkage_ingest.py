@@ -52,6 +52,7 @@ from backend_big_data_spark.operators.fuzzyjoin import (
     edit_distance_join_indexed,
     gram_index,
 )
+from backend_big_data_spark.session import overlap
 from backend_big_data_spark.sources import fsutil
 
 DEFAULT_MAX_DIST = 2
@@ -356,25 +357,17 @@ def seed_master_batch(
     # grams and gramfreq both derive from the just-written admitted rows
     # (gramfreq = the gram multiset's per-gram counts, whether counted
     # from the grams dir or from the same explode lineage) — two
-    # independent outputs, so overlap the writes (guide §2.6: concurrent
-    # jobs back-fill each other's scheduling/commit tails)
-    from concurrent.futures import ThreadPoolExecutor
-
+    # independent outputs in disjoint dirs
     grams = gram_index(spark.read.parquet(os.path.join(master_dir, bdir)), q=q)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fg = pool.submit(
-            lambda: grams.write.mode("overwrite").parquet(
-                os.path.join(master_dir, "grams", bdir)
-            )
-        )
-        ff = pool.submit(
-            lambda: grams.groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(master_dir, "gramfreq", bdir))
-        )
-        fg.result()
-        ff.result()
+    overlap(
+        lambda: grams.write.mode("overwrite").parquet(
+            os.path.join(master_dir, "grams", bdir)
+        ),
+        lambda: grams.groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .write.mode("overwrite")
+        .parquet(os.path.join(master_dir, "gramfreq", bdir)),
+    )
 
 
 def linkage_ingest_stream(
@@ -426,9 +419,7 @@ def compact_linkage_master(
     mixed layout). The layout is STICKY: once bucketed, later
     compactions re-bucket at the recorded width unless overridden.
     Erasure preserves the layout per directory
-    (`retraction._purge_linkage_sidecars`)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    (`retraction._purge_index_sidecars`)."""
     from backend_big_data_spark.streaming.maintenance import _fold
     from backend_big_data_spark.text.sampling import stable_hash
 
@@ -438,9 +429,8 @@ def compact_linkage_master(
     gramfreq_dir = os.path.join(master_dir, "gramfreq")
 
     # The three folds touch DISJOINT directories (master rows, grams,
-    # gramfreq), each with its own crash journal — independent jobs, so
-    # overlap them (guide §2.6). The sidecar folds stay unconditional
-    # exactly as before; only the sequencing changed.
+    # gramfreq), each with its own crash journal, so they overlap. The
+    # sidecar folds stay unconditional.
     def _fold_master() -> list[int]:
         return _fold(spark, master_dir, "batch", keep_latest)
 
@@ -494,14 +484,7 @@ def compact_linkage_master(
             ),
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fm = pool.submit(_fold_master)
-        fg = pool.submit(_fold_grams)
-        ff = pool.submit(_fold_gramfreq)
-        folded = fm.result()
-        fg.result()
-        ff.result()
-    return folded
+    return overlap(_fold_master, _fold_grams, _fold_gramfreq)[0]
 
 
 __all__ = [

@@ -24,18 +24,19 @@ same keyed sum (a fold IS the readers' merge done once and persisted).
 Replay safety: per-batch overwrite — an at-least-once retry rewrites
 identical counts.
 
-Erasure (`retract_from_lm_corpus`): unlike the linkage/setsim INDEX
-sidecars (id-keyed rows the purge can filter), count rows carry no
-document id — but they are a PURE AGGREGATE of the corpus dirs, so the
-journaled erasure protocol here is rebuild-to-match-layout: remove the
-documents (journaled, `retraction.retract_ids`), then recount every
-count sidecar from its surviving documents directory and delete count
-dirs whose documents directory no longer exists (their mass is inside
-the folded docs dir, which gets recounted). Idempotent and crash-safe
-for the same reason: recounting from the current docs layout is a
-fixed point. Ghost counts matter — an erased document's bigrams can
-reconstruct its phrasing, so the sidecar purge is part of the erasure
-guarantee (the linkage master's argument, `retraction.py`).
+Erasure (`retract_from_lm_corpus`) is one `retraction.journaled`
+request. Unlike the linkage/setsim INDEX sidecars (id-keyed rows the
+purge can filter), count rows carry no document id — but they are a
+PURE AGGREGATE of the corpus dirs, so the purge is rebuild-to-match-
+layout (`retraction.recount_sidecars`): remove the documents, then
+recount every affected count sidecar from its surviving documents
+directory and delete count dirs whose documents directory no longer
+exists (their mass is inside the folded docs dir, which gets
+recounted). Recounting from the current docs layout is a fixed point,
+so the replay after a crash is too. Ghost counts matter — an erased
+document's bigrams can reconstruct its phrasing, so the sidecar purge
+is part of the erasure guarantee (the linkage master's argument,
+`retraction.py`).
 
 Scale shape: per-batch cost is one tokenize + two hash aggregates over
 the BATCH; model (re)build cost is over the COUNT TABLES (vocabulary²
@@ -45,7 +46,6 @@ pinned-model discipline `text/lm.py` prescribes, kept fresh per batch.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +53,13 @@ from pyspark.sql import functions as F
 
 from backend_big_data_spark.sources import fsutil
 from backend_big_data_spark.streaming.linkage_ingest import _read_dirs
+from backend_big_data_spark.streaming.retraction import (
+    dirs_holding,
+    journaled,
+    recount_sidecars,
+    replay,
+    retract_ids,
+)
 from backend_big_data_spark.text.kneser_ney import doc_trigram_occurrences
 from backend_big_data_spark.text.lm import doc_bigram_occurrences
 
@@ -214,116 +221,39 @@ def _lm_journal_path(corpus_dir: str) -> str:
     return os.path.join(corpus_dir, "_retract_lm_journal.json")
 
 
-def _affected_doc_dirs(
-    spark: SparkSession, corpus_dir: str, ids: list
-) -> list[str]:
-    """The ``batch=N`` documents dirs currently holding any of ``ids`` —
-    probed BEFORE the row removal (afterwards the evidence is gone), and
-    journaled with the request so the replay recounts the same dirs."""
-    names = sorted(fsutil.list_subdirs(spark, corpus_dir, prefix="batch="))
-    if not names or not ids:
-        return []
-    lits = [F.lit(i) for i in ids]
-    probe = spark.read.option("basePath", corpus_dir).parquet(
-        *[os.path.join(corpus_dir, n) for n in names]
-    )
-    return sorted(
-        f"batch={r['batch']}"
-        for r in probe.filter(F.col("doc_id").isin(lits))
-        .select("batch")
-        .distinct()
-        .collect()
-    )
+def _lm_erasure(spark: SparkSession, corpus_dir: str):
+    """``apply`` of the LM erasure request ``{"ids", "dirs"}``: row
+    removal, recount of the affected count sidecars, then the purge of
+    per-document score rows (``ppl/batch=N`` — derived personal data
+    keyed by doc id, removed like the linkage masters' link rows)."""
 
+    def apply(req: dict) -> dict:
+        out = retract_ids(
+            spark, corpus_dir, req["ids"], id_col="doc_id",
+            drop_band_sidecar=False,
+        )
+        out["count_dirs_rebuilt"] = recount_sidecars(
+            spark,
+            corpus_dir,
+            req["dirs"],
+            {"bigrams": _batch_bigram_counts, "trigrams": _batch_trigram_counts},
+        )
+        out["ppl_rows_removed"] = retract_ids(
+            spark,
+            os.path.join(corpus_dir, "ppl"),
+            req["ids"],
+            id_col="doc_id",
+            drop_band_sidecar=False,
+        )["rows_removed"]
+        return out
 
-def _recount_sidecars(
-    spark: SparkSession, corpus_dir: str, doc_dirs: list[str]
-) -> list[str]:
-    """Recount the count sidecars of ``doc_dirs`` from their (current,
-    post-removal) documents dirs, plus two layout repairs computed from
-    the CURRENT state (so the journaled replay is a fixed point):
-    orphaned count dirs — counts whose docs dir was folded away before
-    the sidecar folds ran — are deleted AFTER the folded docs dir that
-    now covers their mass (from `maintenance.fold_history`) is
-    recounted; an orphan with no fold-history cover falls back to
-    recounting every docs dir (correct, just wider)."""
-    from backend_big_data_spark.streaming.maintenance import fold_history
-
-    doc_names = set(fsutil.list_subdirs(spark, corpus_dir, prefix="batch="))
-    targets = set(doc_dirs) & doc_names
-    hist = fold_history(spark, corpus_dir, "batch")
-    cover = {
-        orig: f"batch={pub}" for pub, origs in hist.items() for orig in origs
-    }
-    orphans: dict[str, list[str]] = {}
-    for side in ("bigrams", "trigrams"):
-        base = os.path.join(corpus_dir, side)
-        side_names = set(fsutil.list_subdirs(spark, base, prefix="batch="))
-        orphans[side] = sorted(side_names - doc_names)
-        for name in orphans[side]:
-            covering = cover.get(int(name.split("=", 1)[1]))
-            if covering is not None and covering in doc_names:
-                targets.add(covering)
-            else:
-                targets = set(doc_names)  # unexplained orphan: recount all
-    rebuilt = []
-    for side, recount in (
-        ("bigrams", _batch_bigram_counts),
-        ("trigrams", _batch_trigram_counts),
-    ):
-        base = os.path.join(corpus_dir, side)
-        for name in sorted(targets):
-            docs_path = os.path.join(corpus_dir, name)
-            if not fsutil.exists(spark, docs_path):
-                continue
-            tmp = os.path.join(base, "_recount_" + name.replace("=", "_"))
-            recount(spark.read.parquet(docs_path)).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            fsutil.delete(spark, os.path.join(base, name))
-            fsutil.rename_checked(spark, tmp, os.path.join(base, name))
-            rebuilt.append(f"{side}/{name}")
-        # orphans go LAST: until the covering recount above lands, the
-        # orphan still holds its batch's (non-erased) mass — a reader in
-        # the window sees at worst a transient over-count, never a loss
-        for name in orphans[side]:
-            fsutil.delete(spark, os.path.join(base, name))
-    return rebuilt
+    return apply
 
 
 def recover_lm_retraction(spark: SparkSession, corpus_dir: str) -> None:
-    """Roll a crashed `retract_from_lm_corpus` forward (idempotent,
-    called on entry): the journal records the erasure request AND the
-    affected docs dirs before any mutation; replay re-removes the rows
-    and re-runs the recount — both fixed points of the current state."""
-    from backend_big_data_spark.streaming.retraction import retract_ids
-
-    raw = fsutil.read_text(spark, _lm_journal_path(corpus_dir))
-    if raw is None:
-        return
-    meta = json.loads(raw)
-    retract_ids(
-        spark, corpus_dir, meta["ids"], id_col="doc_id",
-        drop_band_sidecar=False,
-    )
-    _recount_sidecars(spark, corpus_dir, meta["dirs"])
-    _purge_ppl_rows(spark, corpus_dir, meta["ids"])
-    fsutil.delete(spark, _lm_journal_path(corpus_dir), recursive=False)
-
-
-def _purge_ppl_rows(spark: SparkSession, corpus_dir: str, ids: list) -> int:
-    """Per-document score rows (``ppl/batch=N``) are derived personal
-    data keyed by doc id — erasure removes them like the linkage
-    masters' link rows."""
-    from backend_big_data_spark.streaming.retraction import retract_ids
-
-    ppl_base = os.path.join(corpus_dir, "ppl")
-    if not fsutil.exists(spark, ppl_base):
-        return 0
-    out = retract_ids(
-        spark, ppl_base, ids, id_col="doc_id", drop_band_sidecar=False
-    )
-    return out["rows_removed"]
+    """Replay a crashed `retract_from_lm_corpus` (idempotent, called on
+    entry)."""
+    replay(spark, _lm_journal_path(corpus_dir), _lm_erasure(spark, corpus_dir))
 
 
 def retract_from_lm_corpus(
@@ -333,26 +263,19 @@ def retract_from_lm_corpus(
     sidecars. Ghost n-gram counts can reconstruct an erased document's
     phrasing, so the count purge is part of the erasure guarantee; the
     counts carry no doc id, so the purge RECOUNTS the affected batches'
-    sidecars from their surviving documents (journaled, affected dirs
-    probed before the removal — see module docstring for why recount is
-    the right primitive here and the id-keyed filter is right for the
-    linkage/setsim indexes)."""
-    from backend_big_data_spark.streaming.retraction import retract_ids
-
-    recover_lm_retraction(spark, corpus_dir)
-    dirs = _affected_doc_dirs(spark, corpus_dir, doc_ids)
-    fsutil.write_text_atomic(
+    sidecars from their surviving documents (see module docstring for
+    why recount is the right primitive here and the id-keyed filter is
+    right for the linkage/setsim indexes). The affected docs dirs are
+    probed before the removal and journaled with the request."""
+    return journaled(
         spark,
         _lm_journal_path(corpus_dir),
-        json.dumps({"ids": list(doc_ids), "dirs": dirs}),
+        lambda: {
+            "ids": list(doc_ids),
+            "dirs": sorted(dirs_holding(spark, corpus_dir, doc_ids, "doc_id")),
+        },
+        _lm_erasure(spark, corpus_dir),
     )
-    out = retract_ids(
-        spark, corpus_dir, doc_ids, id_col="doc_id", drop_band_sidecar=False
-    )
-    out["count_dirs_rebuilt"] = _recount_sidecars(spark, corpus_dir, dirs)
-    out["ppl_rows_removed"] = _purge_ppl_rows(spark, corpus_dir, doc_ids)
-    fsutil.delete(spark, _lm_journal_path(corpus_dir), recursive=False)
-    return out
 
 
 __all__ = [

@@ -1,4 +1,4 @@
-"""Journaled negate-delta append — the shared erasure primitive for
+"""Journaled negate-delta append — the erasure step shared by the
 EXACTLY SUBTRACTABLE maintained families (additive keyed deltas: the
 drift monitor's token counts, the CM sketch's cells).
 
@@ -11,15 +11,16 @@ batch ids are non-negative, so no replayed batch can ever overwrite a
 negate delta, while compaction and readers treat it as an ordinary
 delta (sum semantics).
 
-Crash-window contract (the fold/retraction commit-point discipline,
-same as `streaming/maintenance` and the BM25 recount):
+The delta is published with `retraction.publish_dir` behind the
+``_erase_journal.json`` commit point, the temp-dir publish the corpus
+row removal uses too:
 
-- temp directory written, journal absent → PRE-COMMIT crash: rolled
-  BACK by deleting the temp (the erasure never happened; caller
-  re-runs);
-- journal present → COMMITTED: any reader rolls FORWARD by renaming
-  temp over the target if the target is still missing, then drops the
-  journal.
+- temp directory written, journal absent → PRE-COMMIT crash: never
+  listed by a reader, overwritten by the next append (the erasure never
+  happened; caller re-runs);
+- journal present → COMMITTED: any reader rolls FORWARD
+  (`recover_negdelta`, called on entry) by publishing the temp over the
+  target, then drops the journal.
 
 `streaming/drift_monitor` and `streaming/cms_ingest` delegate here;
 their crash matrices in tests/test_erasure_readout_parity.py exercise
@@ -28,12 +29,15 @@ both windows.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from backend_big_data_spark.sources import fsutil
+from backend_big_data_spark.streaming.retraction import (
+    publish_dir,
+    recover_publish,
+)
 
 
 def erase_journal_path(base_dir: str) -> str:
@@ -44,26 +48,10 @@ def recover_negdelta(
     spark: SparkSession, base_dir: str, family: str = "negdelta"
 ) -> None:
     """Roll a crashed `append_negdelta` forward (idempotent; called on
-    entry by every reader and by the append itself). The journal is
-    written only AFTER the negate-delta temp directory is completely on
-    disk, so its presence means publish is safe to repeat."""
-    raw = fsutil.read_text(spark, erase_journal_path(base_dir))
-    if raw is None:
-        return
-    meta = json.loads(raw)
-    target = os.path.join(base_dir, meta["dir"])
-    tmp = os.path.join(base_dir, meta["tmp"])
-    if not fsutil.exists(spark, target):
-        if not fsutil.exists(spark, tmp):
-            raise RuntimeError(
-                f"{family} erasure journal {erase_journal_path(base_dir)} "
-                f"names {meta['dir']} but neither it nor {meta['tmp']} "
-                "exists"
-            )
-        fsutil.rename_checked(spark, tmp, target)
-    elif fsutil.exists(spark, tmp):
-        fsutil.delete(spark, tmp)
-    fsutil.delete(spark, erase_journal_path(base_dir), recursive=False)
+    entry by every reader and by the append itself)."""
+    recover_publish(
+        spark, base_dir, erase_journal_path(base_dir), f"{family} erasure"
+    )
 
 
 def append_negdelta(
@@ -90,16 +78,13 @@ def append_negdelta(
     if n_rows == 0:
         fsutil.delete(spark, os.path.join(base_dir, tmp))
         return {"dir": None, "rows": 0}
-    # commit point: journal AFTER the temp dir is complete on disk
-    fsutil.write_text_atomic(
+    publish_dir(
         spark,
+        base_dir,
         erase_journal_path(base_dir),
-        json.dumps({"dir": name, "tmp": tmp}),
+        {"dir": name, "tmp": tmp},
+        f"{family} erasure",
     )
-    fsutil.rename_checked(
-        spark, os.path.join(base_dir, tmp), os.path.join(base_dir, name)
-    )
-    fsutil.delete(spark, erase_journal_path(base_dir), recursive=False)
     return {"dir": name, "rows": n_rows}
 
 

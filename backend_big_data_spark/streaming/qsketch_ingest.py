@@ -14,9 +14,9 @@ directory overwrite on at-least-once replay (the sample is a
 deterministic function of the batch's rows), no exclusion bookkeeping.
 
 Erasure: a bottom-k sample is not subtractable (evicting a sampled row
-needs the k+1-th hash it displaced), so erasure is the BM25/KMV recount
-discipline — :func:`recount_qsketch_sidecar` rewrites affected batches'
-sample rows from their surviving source rows (tmp + checked rename).
+needs the k+1-th hash it displaced), so erasure is a per-batch recount —
+:func:`recount_qsketch_sidecar` rewrites affected batches' sample rows
+from their surviving source rows (`retraction.rewrite_dir`).
 
 Every readout is exactly replayable in ANSI SQL (the sample is
 ``row_number() OVER (ORDER BY h, key) <= k``), so the maintained state
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from backend_big_data_spark.operators.qsketch import bottomk_sample
 from backend_big_data_spark.sources import fsutil
+from backend_big_data_spark.streaming.retraction import rewrite_dir
 
 
 def qsketch_ingest_sink(
@@ -104,18 +105,18 @@ def recount_qsketch_sidecar(
     k: int = 1024,
 ) -> list[str]:
     """Erasure support (samples are not subtractable): rewrite the named
-    batches' sample rows from their SURVIVING source rows — tmp +
-    checked rename, caller journals (the BM25/KMV recount discipline).
-    Returns the rewritten directory names."""
+    batches' sample rows from their SURVIVING source rows
+    (`retraction.rewrite_dir`; the caller journals). Returns the
+    rewritten directory names."""
     rebuilt = []
     for batch_id, surviving in sorted(batch_sources.items()):
         name = f"batch={batch_id}"
-        tmp = os.path.join(sidecar_dir, "_recount_" + name.replace("=", "_"))
-        bottomk_sample(surviving, group_cols, key, value, k=k).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        fsutil.delete(spark, os.path.join(sidecar_dir, name))
-        fsutil.rename_checked(spark, tmp, os.path.join(sidecar_dir, name))
+        rewrite_dir(
+            spark,
+            sidecar_dir,
+            name,
+            bottomk_sample(surviving, group_cols, key, value, k=k),
+        )
         rebuilt.append(name)
     return rebuilt
 

@@ -10,8 +10,19 @@ brings the sidecars back in line, with the crash-safety discipline of
 `streaming/maintenance.py` (publish-before-destroy around a journaled
 commit point).
 
-Correctness is NOT sidecar-dependent — that is the design's load-bearing
-property, and it is what makes a crash in any window safe:
+Every erasure in ``streaming/`` runs through ONE primitive,
+:func:`journaled`: replay a pending request, plan the new one, journal
+it, apply it, clear the journal. A family writes its steps once, as its
+``apply``; its ``recover_*`` entry point is the replay alone. The
+request journals (``_retract_{linkage,setsim,margin,bm25,lm}_journal.json``)
+record the erased ids before any mutation; the publish journals
+(``_retract_journal.json``, negdelta's ``_erase_journal.json``) commit a
+fully written temp dir (:func:`publish_dir`). The shared steps live
+here too: :func:`dirs_holding`, :func:`recount_sidecars`,
+:func:`rewrite_dir`.
+
+Correctness is NOT sidecar-dependent for the text corpus, which is what
+makes a crash in any window safe there:
 
 - a STALE Bloom bit for a retracted fingerprint causes a false-positive
   prefilter hit; the exact fingerprint semi-join then finds no corpus
@@ -21,14 +32,10 @@ property, and it is what makes a crash in any window safe:
 - a DELETED band sidecar dir is rebuilt from its corpus directory by
   `ingest_dedup.ensure_band_index` (the existing self-healing path).
 
-So sidecar maintenance here is a TIGHTNESS optimisation (fewer false
-candidates), while row removal itself is journaled: the surviving rows
-are fully written to a temp dir before the journal commits, and only
-then is the original replaced — a crash at any point either rolls back
-(sources intact) or rolls forward idempotently on the next call, the
-same protocol as the fold compactor. Like compaction, run retraction
-with the sink quiesced: the brief delete→rename publish window is the
-same one `_finish_fold` has.
+So sidecar maintenance there is a TIGHTNESS optimisation, while row
+removal itself is journaled. Like compaction, run retraction with the
+sink quiesced: the brief delete→rename publish window is the same one
+`_finish_fold` has.
 
 Retraction deliberately rewrites HISTORY as well: the ids disappear from
 every fold-history snapshot (`read_corpus_snapshot`), because erasure
@@ -44,11 +51,200 @@ from __future__ import annotations
 
 import json
 import os
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backend_big_data_spark.sources import fsutil
+
+
+def replay(
+    spark: SparkSession, journal_path: str, apply: Callable[[dict], object]
+) -> None:
+    """Run a pending journaled request through ``apply`` and clear the
+    journal — the whole of every ``recover_*`` entry point. No journal:
+    no step runs."""
+    raw = fsutil.read_text(spark, journal_path)
+    if raw is None:
+        return
+    apply(json.loads(raw))
+    fsutil.delete(spark, journal_path, recursive=False)
+
+
+def journaled(
+    spark: SparkSession,
+    journal_path: str,
+    plan_request: Callable[[], dict],
+    apply: Callable[[dict], object],
+):
+    """The one journaled-mutation primitive: replay any pending request,
+    build the new one with ``plan_request()`` (probes and pre-erasure
+    compaction run here, before the commit point), journal it, run
+    ``apply(request)``, clear the journal and return ``apply``'s result.
+    ``apply`` must be idempotent: after a crash it reruns in full on the
+    same request."""
+    replay(spark, journal_path, apply)
+    request = plan_request()
+    fsutil.write_text_atomic(spark, journal_path, json.dumps(request))
+    out = apply(request)
+    fsutil.delete(spark, journal_path, recursive=False)
+    return out
+
+
+def _publish_steps(spark: SparkSession, base: str, journal_path: str, label: str):
+    """``apply`` of a publish journal ``{"dir", "tmp"[, "bands"]}``. The
+    journal certifies the temp dir was COMPLETE when it committed, so
+    every step is safe to repeat: publish temp over the target (a null
+    ``tmp`` publishes as a DELETE), drop the recorded band sidecar dir."""
+
+    def apply(meta: dict) -> None:
+        target = os.path.join(base, meta["dir"])
+        if meta["tmp"] is None:
+            fsutil.delete(spark, target)
+        else:
+            tmp = os.path.join(base, meta["tmp"])
+            if fsutil.exists(spark, tmp):
+                fsutil.delete(spark, target)
+                fsutil.rename_checked(spark, tmp, target)
+            if not fsutil.exists(spark, target):
+                raise RuntimeError(
+                    f"{label} journal {journal_path} names {meta['dir']} "
+                    f"but neither it nor {meta['tmp']} exists"
+                )
+        if meta.get("bands"):
+            fsutil.delete(spark, os.path.join(base, meta["bands"]))
+
+    return apply
+
+
+def publish_dir(
+    spark: SparkSession, base: str, journal_path: str, meta: dict, label: str
+) -> None:
+    """Publish the fully written temp dir ``meta["tmp"]`` as
+    ``{base}/{meta["dir"]}`` behind a commit-point journal. A temp dir
+    with no journal is a pre-commit crash: readers never list it and the
+    next write of the same temp name overwrites it (roll back)."""
+    journaled(
+        spark,
+        journal_path,
+        lambda: meta,
+        _publish_steps(spark, base, journal_path, label),
+    )
+
+
+def recover_publish(
+    spark: SparkSession, base: str, journal_path: str, label: str
+) -> None:
+    """Roll a committed :func:`publish_dir` forward (idempotent)."""
+    replay(spark, journal_path, _publish_steps(spark, base, journal_path, label))
+
+
+def dirs_holding(
+    spark: SparkSession,
+    base: str,
+    ids: list,
+    id_col: str = "id",
+    prefix: str = "batch",
+) -> dict[str, int]:
+    """``{prefix}=N`` dir name → number of its rows naming one of
+    ``ids``, for the dirs under ``base`` that hold any. Every dir on disk
+    is probed, a superseded fold source too: erasure must reach every
+    copy. One column-pruned, partition-discovered probe per directory
+    LAYOUT: flat dirs and dirs partitioned by a column (a bucketed fold,
+    the cluster-partitioned embedding corpus) are probed separately,
+    since a single multi-path read rejects the mixed structure."""
+    names = fsutil.list_subdirs(spark, base, prefix=f"{prefix}=")
+    if not names or not ids:
+        return {}
+    layouts: dict[frozenset, list[str]] = {}
+    for n in names:
+        part_cols = frozenset(
+            d.split("=", 1)[0]
+            for d in fsutil.list_subdirs(spark, os.path.join(base, n))
+            if "=" in d
+        )
+        layouts.setdefault(part_cols, []).append(n)
+    lits = [F.lit(i) for i in ids]
+    hits: dict[str, int] = {}
+    for group in layouts.values():
+        probe = spark.read.option("basePath", base).parquet(
+            *[os.path.join(base, n) for n in group]
+        )
+        hits.update(
+            (f"{prefix}={r[prefix]}", r["n"])
+            for r in probe.filter(F.col(id_col).isin(lits))
+            .groupBy(prefix)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+    return hits
+
+
+def rewrite_dir(
+    spark: SparkSession, base: str, name: str, frame: DataFrame
+) -> None:
+    """Replace ``{base}/{name}`` with ``frame``: write a ``_recount_*``
+    temp dir, delete the old dir, checked rename. A silent rename
+    failure after the delete would lose the dir once the caller's
+    journal clears, so the rename raises instead and the journal stays
+    pending."""
+    tmp = os.path.join(base, "_recount_" + name.replace("=", "_"))
+    frame.write.mode("overwrite").parquet(tmp)
+    fsutil.delete(spark, os.path.join(base, name))
+    fsutil.rename_checked(spark, tmp, os.path.join(base, name))
+
+
+def recount_sidecars(
+    spark: SparkSession,
+    base: str,
+    doc_dirs: list[str],
+    sides: dict[str, Callable[[DataFrame], DataFrame]],
+) -> list[str]:
+    """Rebuild-to-match-layout for AGGREGATE sidecars of a ``batch=N``
+    documents log (rows carry no id, so they are recounted, not
+    filtered): ``{side}/batch=N`` is rewritten as ``sides[side]`` over
+    the current (post-removal) docs dir, for every affected dir in
+    ``doc_dirs``. Orphaned sidecar dirs — the docs dir was folded away
+    before the sidecar folds ran — are deleted AFTER the folded docs dir
+    that covers them (`maintenance.fold_history`) is recounted; an
+    orphan with no cover falls back to recounting every docs dir. All
+    of it is computed from the current state, so a replay is a fixed
+    point. Returns the rewritten ``side/batch=N`` names."""
+    from backend_big_data_spark.streaming.maintenance import fold_history
+
+    doc_names = set(fsutil.list_subdirs(spark, base, prefix="batch="))
+    targets = set(doc_dirs) & doc_names
+    cover = {
+        orig: f"batch={pub}"
+        for pub, origs in fold_history(spark, base, "batch").items()
+        for orig in origs
+    }
+    orphans: dict[str, list[str]] = {}
+    for side in sides:
+        side_names = fsutil.list_subdirs(
+            spark, os.path.join(base, side), prefix="batch="
+        )
+        orphans[side] = sorted(set(side_names) - doc_names)
+        for name in orphans[side]:
+            covering = cover.get(int(name.split("=", 1)[1]))
+            if covering in doc_names:
+                targets.add(covering)
+            else:
+                targets = set(doc_names)  # unexplained orphan: recount all
+    rebuilt = []
+    for side, recount in sides.items():
+        side_base = os.path.join(base, side)
+        for name in sorted(targets):
+            frame = recount(spark.read.parquet(os.path.join(base, name)))
+            rewrite_dir(spark, side_base, name, frame)
+            rebuilt.append(f"{side}/{name}")
+        # orphans go LAST: until the covering recount lands, the orphan
+        # still holds its batch's (non-erased) mass — a reader in the
+        # window sees at worst a transient over-count, never a loss
+        for name in orphans[side]:
+            fsutil.delete(spark, os.path.join(side_base, name))
+    return rebuilt
 
 
 def _journal_path(base: str) -> str:
@@ -56,33 +252,9 @@ def _journal_path(base: str) -> str:
 
 
 def recover_retraction(spark: SparkSession, base: str) -> None:
-    """Roll a crashed retraction forward (idempotent; called on entry).
-
-    The journal's existence certifies the temp dir held the COMPLETE
-    surviving rows when it was committed, so every step is safe to
-    repeat: publish temp over the original, drop the recorded band
-    sidecar dir, drop the journal."""
-    raw = fsutil.read_text(spark, _journal_path(base))
-    if raw is None:
-        return
-    meta = json.loads(raw)
-    target = os.path.join(base, meta["dir"])
-    if meta["tmp"] is None:
-        # every row of the directory was retracted: publish = delete it
-        fsutil.delete(spark, target)
-    else:
-        tmp = os.path.join(base, meta["tmp"])
-        if fsutil.exists(spark, tmp):
-            fsutil.delete(spark, target)
-            fsutil.rename_checked(spark, tmp, target)
-        if not fsutil.exists(spark, target):
-            raise RuntimeError(
-                f"retraction journal {_journal_path(base)} names {target} "
-                f"but neither it nor {tmp} exists"
-            )
-    if meta.get("bands"):
-        fsutil.delete(spark, os.path.join(base, meta["bands"]))
-    fsutil.delete(spark, _journal_path(base), recursive=False)
+    """Roll a crashed row-removal publish forward (idempotent; called on
+    entry by :func:`retract_ids`)."""
+    recover_publish(spark, base, _journal_path(base), "retraction")
 
 
 def retract_ids(
@@ -103,43 +275,15 @@ def retract_ids(
     embedding corpus is laid out by ``cluster``) so the rewrite
     preserves it."""
     recover_retraction(spark, base)
-    from backend_big_data_spark.streaming.maintenance import (
-        fold_exclusions,
-        recover_fold,
-    )
+    from backend_big_data_spark.streaming.maintenance import recover_fold
 
-    # resolve any pending fold first so no directory hides behind its
-    # crash-window mask while we erase
+    # resolve any pending fold first: its superseded source dirs are
+    # deleted by the fold, not rewritten here
     recover_fold(spark, base, prefix)
-    skip = fold_exclusions(spark, base, prefix)
-    names = sorted(
-        n
-        for n in fsutil.list_subdirs(spark, base, prefix=f"{prefix}=")
-        if n not in skip
-    )
-    if not names or not ids:
-        return {"dirs_rewritten": [], "rows_removed": 0}
+    hits = dirs_holding(spark, base, ids, id_col, prefix)
     lits = [F.lit(i) for i in ids]
-    # ONE partition-discovered probe finds every affected directory:
-    # column-pruned to the id (footer stats skip clean files), grouped on
-    # the discovered {prefix} partition column — per-request cost is a
-    # single metadata-light job, not a job per directory
-    probe = spark.read.option("basePath", base).parquet(
-        *[os.path.join(base, n) for n in names]
-    )
-    hits = {
-        f"{prefix}={r[prefix]}": r["n"]
-        for r in probe.filter(F.col(id_col).isin(lits))
-        .groupBy(prefix)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    rewritten: list[str] = []
-    removed = 0
     for name in sorted(hits):
-        n_hit = hits[name]
-        path = os.path.join(base, name)
-        df = spark.read.parquet(path)
+        df = spark.read.parquet(os.path.join(base, name))
         # explicit isNull arm: ``~isin`` is NULL (not true) for a NULL id,
         # so without it null-id rows would be deleted as collateral
         surviving = df.filter(
@@ -154,9 +298,7 @@ def retract_ids(
         _journaled_replace(
             spark, base, name, surviving, partition_by, bands_rel
         )
-        rewritten.append(name)
-        removed += n_hit
-    return {"dirs_rewritten": rewritten, "rows_removed": removed}
+    return {"dirs_rewritten": sorted(hits), "rows_removed": sum(hits.values())}
 
 
 def _journaled_replace(
@@ -168,11 +310,9 @@ def _journaled_replace(
     bands_rel: str | None = None,
 ) -> None:
     """Publish ``surviving`` over ``{base}/{rel_dir}`` behind the
-    retraction journal: temp dir fully written first, journal commit,
-    then the delete→rename publish and sidecar drop run through
-    :func:`recover_retraction` (so a crash anywhere replays them). An
-    EMPTY frame publishes as a directory DELETE — an empty parquet dir
-    would break the union readers."""
+    retraction journal (:func:`publish_dir`), dropping ``bands_rel``
+    with it. An EMPTY frame publishes as a directory DELETE — an empty
+    parquet dir would break the union readers."""
     if surviving.isEmpty():
         tmp_name = None
     else:
@@ -182,8 +322,7 @@ def _journaled_replace(
             writer = writer.partitionBy(*partition_by)
         writer.parquet(os.path.join(base, tmp_name))
     meta = {"dir": rel_dir, "tmp": tmp_name, "bands": bands_rel}
-    fsutil.write_text_atomic(spark, _journal_path(base), json.dumps(meta))
-    recover_retraction(spark, base)  # the journaled steps themselves
+    publish_dir(spark, base, _journal_path(base), meta, "retraction")
 
 
 def retract_from_ingest_corpus(
@@ -255,10 +394,6 @@ def retract_from_image_corpus(
     return out
 
 
-def _linkage_journal_path(master_dir: str) -> str:
-    return os.path.join(master_dir, "_retract_linkage_journal.json")
-
-
 def _purge_index_sidecars(
     spark: SparkSession,
     master_dir: str,
@@ -268,7 +403,7 @@ def _purge_index_sidecars(
     key_col: str,
     rebuild,
     bucket_col: str | None = None,
-    bucket_expr=None,
+    n_buckets: int | None = None,
 ) -> list[str]:
     """Rewrite every inverted-index/frequency sidecar directory still
     naming a retracted id, from its (already rewritten) master directory
@@ -281,55 +416,36 @@ def _purge_index_sidecars(
 
     ``rebuild(master_df) -> (id, key_col) index frame``; the frequency
     sidecar is its per-``key_col`` count. Shared by the linkage master
-    (grams/gramfreq) and the setsim master (tokens/tokfreq).
+    (grams/gramfreq), the setsim master (tokens/tokfreq) and the margin
+    master (buckets).
 
-    ``bucket_col``/``bucket_expr``: bucketed-layout support (the linkage
-    gram index after a ``gram_buckets`` fold): dirs carrying the bucket
-    partition column are probed separately from flat dirs (a single
-    multi-path read would reject the mixed structure), and their
-    rewrites recompute ``bucket_col = bucket_expr`` and publish
-    PARTITIONED BY it — erasure preserves each directory's own layout."""
+    ``bucket_col``/``n_buckets``: bucketed-layout support (an index
+    after a bucketed fold, recorded width ``n_buckets``): the rewrite of
+    a dir carrying the bucket partition column recomputes ``bucket_col =
+    stable_hash(key_col) % n_buckets`` and publishes PARTITIONED BY it —
+    erasure preserves each directory's own layout (the probe,
+    :func:`dirs_holding`, already reads each layout separately)."""
+    from backend_big_data_spark.text.sampling import stable_hash
+
     index_base = os.path.join(master_dir, index_name)
-    names = sorted(fsutil.list_subdirs(spark, index_base, prefix="batch="))
-    if not names or not ids:
-        return []
-    bucketed_names = {
-        n
-        for n in names
-        if bucket_col
-        and fsutil.list_subdirs(
-            spark, os.path.join(index_base, n), prefix=f"{bucket_col}="
-        )
-    }
     lits = [F.lit(i) for i in ids]
-    hit: list[str] = []
-    for group in (
-        sorted(set(names) - bucketed_names),
-        sorted(bucketed_names),
-    ):
-        if not group:
-            continue
-        probe = spark.read.option("basePath", index_base).parquet(
-            *[os.path.join(index_base, n) for n in group]
-        )
-        hit.extend(
-            f"batch={r['batch']}"
-            for r in probe.filter(F.col("id").isin(lits))
-            .select("batch")
-            .distinct()
-            .collect()
-        )
-    for name in sorted(hit):
+    hit = sorted(dirs_holding(spark, index_base, ids))
+    for name in hit:
         master_path = os.path.join(master_dir, name)
         freq_rel = os.path.join(freq_name, name)
         index_rel = os.path.join(index_name, name)
-        part_by: tuple[str, ...] = (
-            (bucket_col,) if name in bucketed_names else ()
+        bucketed = bool(n_buckets) and bool(
+            fsutil.list_subdirs(
+                spark, os.path.join(index_base, name), prefix=f"{bucket_col}="
+            )
         )
         if fsutil.exists(spark, master_path):
             fresh = rebuild(spark.read.parquet(master_path))
-            if name in bucketed_names:
-                fresh = fresh.withColumn(bucket_col, bucket_expr)
+            if bucketed:
+                fresh = fresh.withColumn(
+                    bucket_col,
+                    (stable_hash(F.col(key_col)) % n_buckets).cast("int"),
+                )
         else:
             # Master dir absent for this batch id: its rows were folded
             # into an older master dir and the sidecar folds never ran (a
@@ -352,243 +468,13 @@ def _purge_index_sidecars(
                 fresh.groupBy(key_col).agg(F.count(F.lit(1)).alias("cnt")),
             )
         _journaled_replace(
-            spark, master_dir, index_rel, fresh, partition_by=part_by
+            spark,
+            master_dir,
+            index_rel,
+            fresh,
+            partition_by=(bucket_col,) if bucketed else (),
         )
-    return sorted(hit)
-
-
-def _purge_linkage_sidecars(
-    spark: SparkSession, master_dir: str, ids: list, q: int
-) -> list[str]:
-    from backend_big_data_spark.operators.fuzzyjoin import gram_index
-    from backend_big_data_spark.streaming.linkage_ingest import (
-        _gram_bucket_count,
-    )
-    from backend_big_data_spark.text.sampling import stable_hash
-
-    n_buckets = _gram_bucket_count(spark, master_dir)
-    return _purge_index_sidecars(
-        spark,
-        master_dir,
-        ids,
-        index_name="grams",
-        freq_name="gramfreq",
-        key_col="gram",
-        rebuild=lambda df: gram_index(df, q=q),
-        bucket_col="__gb" if n_buckets else None,
-        bucket_expr=(
-            (stable_hash(F.col("gram")) % n_buckets).cast("int")
-            if n_buckets
-            else None
-        ),
-    )
-
-
-def _purge_linkage_links(spark: SparkSession, master_dir: str, ids: list) -> int:
-    links_base = os.path.join(master_dir, "links")
-    if not fsutil.exists(spark, links_base):
-        return 0
-    out = retract_ids(
-        spark, links_base, ids, id_col="master_id", drop_band_sidecar=False
-    )
-    return out["rows_removed"]
-
-
-def recover_linkage_retraction(spark: SparkSession, master_dir: str) -> None:
-    """Roll a crashed `retract_from_linkage_master` forward (idempotent;
-    called on entry). The linkage journal records the erasure REQUEST
-    (ids, q) before any mutation, and is cleared only after the sidecar
-    and link purges complete — so a crash in any window replays them
-    here. Without this, the q-gram multiset of an erased string could
-    survive in the ``grams`` sidecar forever: erasure that survives in
-    a sidecar is not erasure."""
-    raw = fsutil.read_text(spark, _linkage_journal_path(master_dir))
-    if raw is None:
-        return
-    meta = json.loads(raw)
-    retract_ids(
-        spark, master_dir, meta["ids"], id_col="id", drop_band_sidecar=False
-    )
-    _purge_linkage_sidecars(spark, master_dir, meta["ids"], meta["q"])
-    _purge_linkage_links(spark, master_dir, meta["ids"])
-    fsutil.delete(spark, _linkage_journal_path(master_dir), recursive=False)
-
-
-def retract_from_linkage_master(
-    spark: SparkSession, master_dir: str, ids: list, q: int = 3
-) -> dict:
-    """Erase entities from a linkage master
-    (`streaming/linkage_ingest.py` layout): journaled row removal, every
-    gram-index and gram-frequency sidecar directory still naming an
-    erased id REWRITTEN from its surviving master rows, and link-result
-    rows naming the erased master ids purged from ``links/batch=N``
-    (derived personal data goes with the entity).
-
-    The whole sequence runs behind its own journal recording the erasure
-    request up front: unlike the text corpus's Bloom/band sidecars
-    (where staleness only costs false-positive candidates), ghost gram
-    rows largely RECONSTRUCT the erased string, so the sidecar purge is
-    part of the erasure guarantee, not a tightness optimisation — it
-    must survive a crash in any window. Sidecar purge targets are
-    detected by probing the sidecars for the ids (never keyed off which
-    master dirs the row removal happened to rewrite), so the journaled
-    replay in :func:`recover_linkage_retraction` is unconditional and
-    idempotent."""
-    recover_linkage_retraction(spark, master_dir)
-    fsutil.write_text_atomic(
-        spark,
-        _linkage_journal_path(master_dir),
-        json.dumps({"ids": list(ids), "q": q}),
-    )
-    out = retract_ids(
-        spark, master_dir, ids, id_col="id", drop_band_sidecar=False
-    )
-    out["gram_dirs_rewritten"] = _purge_linkage_sidecars(
-        spark, master_dir, ids, q
-    )
-    out["link_rows_removed"] = _purge_linkage_links(spark, master_dir, ids)
-    fsutil.delete(spark, _linkage_journal_path(master_dir), recursive=False)
-    return out
-
-
-def _setsim_journal_path(master_dir: str) -> str:
-    return os.path.join(master_dir, "_retract_setsim_journal.json")
-
-
-def _purge_setsim_sidecars(
-    spark: SparkSession, master_dir: str, ids: list
-) -> list[str]:
-    from backend_big_data_spark.operators.setsimjoin import token_index
-    from backend_big_data_spark.streaming.setsim_ingest import (
-        _token_bucket_count,
-    )
-    from backend_big_data_spark.text.sampling import stable_hash
-
-    n_buckets = _token_bucket_count(spark, master_dir)
-    return _purge_index_sidecars(
-        spark,
-        master_dir,
-        ids,
-        index_name="tokens",
-        freq_name="tokfreq",
-        key_col="token",
-        rebuild=token_index,
-        bucket_col="__tb" if n_buckets else None,
-        bucket_expr=(
-            (stable_hash(F.col("token")) % n_buckets).cast("int")
-            if n_buckets
-            else None
-        ),
-    )
-
-
-def recover_setsim_retraction(spark: SparkSession, master_dir: str) -> None:
-    """Roll a crashed `retract_from_setsim_master` forward (idempotent;
-    called on entry) — the setsim twin of
-    :func:`recover_linkage_retraction`: the journal records the erasure
-    request before any mutation and clears only after the token-sidecar
-    and link purges complete (the token index reconstructs the erased
-    record's word set, so its purge is part of the erasure
-    guarantee)."""
-    raw = fsutil.read_text(spark, _setsim_journal_path(master_dir))
-    if raw is None:
-        return
-    meta = json.loads(raw)
-    retract_ids(
-        spark, master_dir, meta["ids"], id_col="id", drop_band_sidecar=False
-    )
-    _purge_setsim_sidecars(spark, master_dir, meta["ids"])
-    _purge_linkage_links(spark, master_dir, meta["ids"])
-    fsutil.delete(spark, _setsim_journal_path(master_dir), recursive=False)
-
-
-def retract_from_setsim_master(
-    spark: SparkSession, master_dir: str, ids: list
-) -> dict:
-    """Erase entities from a set-similarity linkage master
-    (`streaming/setsim_ingest.py` layout): journaled row removal, every
-    token-index and token-frequency sidecar directory still naming an
-    erased id REWRITTEN from its surviving master rows, and link rows
-    naming the erased master ids purged — the same erasure journal
-    protocol as :func:`retract_from_linkage_master` (see its docstring
-    for the crash-window argument)."""
-    recover_setsim_retraction(spark, master_dir)
-    fsutil.write_text_atomic(
-        spark,
-        _setsim_journal_path(master_dir),
-        json.dumps({"ids": list(ids)}),
-    )
-    out = retract_ids(
-        spark, master_dir, ids, id_col="id", drop_band_sidecar=False
-    )
-    out["token_dirs_rewritten"] = _purge_setsim_sidecars(
-        spark, master_dir, ids
-    )
-    out["link_rows_removed"] = _purge_linkage_links(spark, master_dir, ids)
-    fsutil.delete(spark, _setsim_journal_path(master_dir), recursive=False)
-    return out
-
-
-def _margin_journal_path(master_dir: str) -> str:
-    return os.path.join(master_dir, "_retract_margin_journal.json")
-
-
-def _purge_margin_sidecars(
-    spark: SparkSession,
-    master_dir: str,
-    ids: list,
-    dim: int,
-    num_bits: int,
-    num_tables: int,
-) -> list[str]:
-    from backend_big_data_spark.streaming.margin_ingest import bucket_index
-
-    return _purge_index_sidecars(
-        spark,
-        master_dir,
-        ids,
-        index_name="buckets",
-        freq_name="bucketfreq",  # the margin master keeps no frequency
-        key_col="bucket",        # sidecar; the exists() gate skips it
-        rebuild=lambda df: bucket_index(
-            df, dim=dim, num_bits=num_bits, num_tables=num_tables
-        ),
-    )
-
-
-def _margin_affected_dirs(spark: SparkSession, master_dir: str, ids: list) -> list[str]:
-    """batch=N names whose BUCKET index OR master rows still name a
-    retracted id — computed at request time (before any mutation) and
-    journaled: the moment sidecars carry no ids of their own, so the
-    id-keyed layers are the durable markers of which batches an erased
-    entity touched. BOTH layers are probed because a master-only fold
-    (the compaction crash window) can relocate a row's master dir away
-    from its bucket dir: the bucket hit names the orphan moment dir to
-    DELETE, the master hit names the fold-target moment dir to RECOUNT —
-    together the surviving moment total stays exact (the recount folds
-    the relocated survivors in)."""
-    out: set[str] = set()
-    if not ids:
-        return []
-    lits = [F.lit(i) for i in ids]
-    for base, col in (
-        (os.path.join(master_dir, "buckets"), "id"),
-        (master_dir, "id"),
-    ):
-        names = sorted(fsutil.list_subdirs(spark, base, prefix="batch="))
-        if not names:
-            continue
-        probe = spark.read.option("basePath", base).parquet(
-            *[os.path.join(base, n) for n in names]
-        )
-        out.update(
-            f"batch={r['batch']}"
-            for r in probe.filter(F.col(col).isin(lits))
-            .select("batch")
-            .distinct()
-            .collect()
-        )
-    return sorted(out)
+    return hit
 
 
 def _purge_margin_moments(
@@ -620,33 +506,193 @@ def _purge_margin_moments(
     return touched
 
 
-def recover_margin_retraction(spark: SparkSession, master_dir: str) -> None:
-    """Roll a crashed `retract_from_margin_master` forward (idempotent;
-    called on entry). The journal records the erasure request AND the
-    sink's LSH geometry before any mutation (the bucket rebuild needs
-    dim/bits/tables, and a recovery must not depend on the caller
-    re-supplying them correctly), and clears only after the bucket-
-    sidecar and link purges complete — the bucket keys localize the
-    erased record in LSH space, so their purge is part of the erasure
-    guarantee."""
-    raw = fsutil.read_text(spark, _margin_journal_path(master_dir))
-    if raw is None:
-        return
-    meta = json.loads(raw)
-    retract_ids(
-        spark, master_dir, meta["ids"], id_col="id", drop_band_sidecar=False
+def _master_erasure(spark: SparkSession, master_dir: str, purge_sidecars):
+    """``apply`` shared by the entity masters: row removal, the family's
+    sidecar purge (``purge_sidecars(request) -> result keys``), then the
+    purge of link rows naming the erased master ids (derived personal
+    data goes with the entity)."""
+
+    def apply(req: dict) -> dict:
+        out = retract_ids(
+            spark, master_dir, req["ids"], id_col="id", drop_band_sidecar=False
+        )
+        out.update(purge_sidecars(req))
+        out["link_rows_removed"] = retract_ids(
+            spark,
+            os.path.join(master_dir, "links"),
+            req["ids"],
+            id_col="master_id",
+            drop_band_sidecar=False,
+        )["rows_removed"]
+        return out
+
+    return apply
+
+
+def _linkage_journal_path(master_dir: str) -> str:
+    return os.path.join(master_dir, "_retract_linkage_journal.json")
+
+
+def _linkage_erasure(spark: SparkSession, master_dir: str):
+    from backend_big_data_spark.operators.fuzzyjoin import gram_index
+    from backend_big_data_spark.streaming.linkage_ingest import (
+        _gram_bucket_count,
     )
-    _purge_margin_moments(spark, master_dir, meta.get("moment_dirs", []), meta["dim"])
-    _purge_margin_sidecars(
+
+    return _master_erasure(
         spark,
         master_dir,
-        meta["ids"],
-        meta["dim"],
-        meta["num_bits"],
-        meta["num_tables"],
+        lambda req: {
+            "gram_dirs_rewritten": _purge_index_sidecars(
+                spark,
+                master_dir,
+                req["ids"],
+                index_name="grams",
+                freq_name="gramfreq",
+                key_col="gram",
+                rebuild=lambda df: gram_index(df, q=req["q"]),
+                bucket_col="__gb",
+                n_buckets=_gram_bucket_count(spark, master_dir),
+            )
+        },
     )
-    _purge_linkage_links(spark, master_dir, meta["ids"])
-    fsutil.delete(spark, _margin_journal_path(master_dir), recursive=False)
+
+
+def recover_linkage_retraction(spark: SparkSession, master_dir: str) -> None:
+    """Replay a crashed `retract_from_linkage_master` (idempotent;
+    called on entry)."""
+    replay(
+        spark,
+        _linkage_journal_path(master_dir),
+        _linkage_erasure(spark, master_dir),
+    )
+
+
+def retract_from_linkage_master(
+    spark: SparkSession, master_dir: str, ids: list, q: int = 3
+) -> dict:
+    """Erase entities from a linkage master
+    (`streaming/linkage_ingest.py` layout): journaled row removal, every
+    gram-index and gram-frequency sidecar directory still naming an
+    erased id REWRITTEN from its surviving master rows, and link-result
+    rows naming the erased master ids purged from ``links/batch=N``.
+
+    The whole sequence runs under :func:`journaled` with the request
+    (ids, q) recorded up front: unlike the text corpus's Bloom/band
+    sidecars (where staleness only costs false-positive candidates),
+    ghost gram rows largely RECONSTRUCT the erased string, so the
+    sidecar purge is part of the erasure guarantee, not a tightness
+    optimisation — it must survive a crash in any window. Sidecar purge
+    targets are detected by probing the sidecars for the ids (never
+    keyed off which master dirs the row removal happened to rewrite),
+    so the replay is unconditional and idempotent."""
+    return journaled(
+        spark,
+        _linkage_journal_path(master_dir),
+        lambda: {"ids": list(ids), "q": q},
+        _linkage_erasure(spark, master_dir),
+    )
+
+
+def _setsim_journal_path(master_dir: str) -> str:
+    return os.path.join(master_dir, "_retract_setsim_journal.json")
+
+
+def _setsim_erasure(spark: SparkSession, master_dir: str):
+    from backend_big_data_spark.operators.setsimjoin import token_index
+    from backend_big_data_spark.streaming.setsim_ingest import (
+        _token_bucket_count,
+    )
+
+    return _master_erasure(
+        spark,
+        master_dir,
+        lambda req: {
+            "token_dirs_rewritten": _purge_index_sidecars(
+                spark,
+                master_dir,
+                req["ids"],
+                index_name="tokens",
+                freq_name="tokfreq",
+                key_col="token",
+                rebuild=token_index,
+                bucket_col="__tb",
+                n_buckets=_token_bucket_count(spark, master_dir),
+            )
+        },
+    )
+
+
+def recover_setsim_retraction(spark: SparkSession, master_dir: str) -> None:
+    """Replay a crashed `retract_from_setsim_master` (idempotent;
+    called on entry)."""
+    replay(
+        spark,
+        _setsim_journal_path(master_dir),
+        _setsim_erasure(spark, master_dir),
+    )
+
+
+def retract_from_setsim_master(
+    spark: SparkSession, master_dir: str, ids: list
+) -> dict:
+    """Erase entities from a set-similarity linkage master
+    (`streaming/setsim_ingest.py` layout): journaled row removal, every
+    token-index and token-frequency sidecar directory still naming an
+    erased id REWRITTEN from its surviving master rows, and link rows
+    naming the erased master ids purged. The token index reconstructs
+    the erased record's word set, so its purge is part of the erasure
+    guarantee (see :func:`retract_from_linkage_master`)."""
+    return journaled(
+        spark,
+        _setsim_journal_path(master_dir),
+        lambda: {"ids": list(ids)},
+        _setsim_erasure(spark, master_dir),
+    )
+
+
+def _margin_journal_path(master_dir: str) -> str:
+    return os.path.join(master_dir, "_retract_margin_journal.json")
+
+
+def _margin_erasure(spark: SparkSession, master_dir: str):
+    from backend_big_data_spark.streaming.margin_ingest import bucket_index
+
+    return _master_erasure(
+        spark,
+        master_dir,
+        lambda req: {
+            "moment_dirs_rewritten": _purge_margin_moments(
+                spark, master_dir, req.get("moment_dirs", []), req["dim"]
+            ),
+            # the margin master keeps no frequency sidecar: the purge's
+            # exists() gate skips "bucketfreq"
+            "bucket_dirs_rewritten": _purge_index_sidecars(
+                spark,
+                master_dir,
+                req["ids"],
+                index_name="buckets",
+                freq_name="bucketfreq",
+                key_col="bucket",
+                rebuild=lambda df: bucket_index(
+                    df,
+                    dim=req["dim"],
+                    num_bits=req["num_bits"],
+                    num_tables=req["num_tables"],
+                ),
+            ),
+        },
+    )
+
+
+def recover_margin_retraction(spark: SparkSession, master_dir: str) -> None:
+    """Replay a crashed `retract_from_margin_master` (idempotent;
+    called on entry)."""
+    replay(
+        spark,
+        _margin_journal_path(master_dir),
+        _margin_erasure(spark, master_dir),
+    )
 
 
 def retract_from_margin_master(
@@ -661,45 +707,55 @@ def retract_from_margin_master(
     """Erase entities from an embedding linkage master
     (`streaming/margin_ingest.py` layout): journaled row removal, every
     bucket-sidecar directory still naming an erased id REWRITTEN from
-    its surviving master rows, and link rows naming the erased master
-    ids purged — the same erasure journal protocol as
-    :func:`retract_from_linkage_master` (see its docstring for the
-    crash-window argument). ``dim``/``num_bits``/``num_tables`` must
-    match the sink's geometry (they are journaled for crash recovery)."""
-    recover_margin_retraction(spark, master_dir)
-    moment_dirs = _margin_affected_dirs(spark, master_dir, list(ids))
-    fsutil.write_text_atomic(
+    its surviving master rows, the covariance moments of every affected
+    batch recounted, and link rows naming the erased master ids purged
+    (see :func:`retract_from_linkage_master` for the crash-window
+    argument). The bucket keys localize the erased record in LSH space,
+    so their purge is part of the erasure guarantee.
+
+    The request journals the LSH geometry (the bucket rebuild needs
+    dim/bits/tables, and a replay must not depend on the caller
+    re-supplying them correctly; they must match the sink's) and the
+    ``moment_dirs``: the batch=N names whose BUCKET index OR master rows
+    still name an erased id, probed before any mutation. Moment sidecars
+    carry no ids, so the id-keyed layers are the durable markers of
+    which batches an erased entity touched. BOTH are probed because a
+    master-only fold (the compaction crash window) can relocate a row's
+    master dir away from its bucket dir: the bucket hit names the orphan
+    moment dir to DELETE, the master hit the fold-target moment dir to
+    RECOUNT."""
+
+    def plan() -> dict:
+        moment_dirs = set(
+            dirs_holding(spark, os.path.join(master_dir, "buckets"), ids)
+        ) | set(dirs_holding(spark, master_dir, ids))
+        return {
+            "ids": list(ids),
+            "dim": dim,
+            "num_bits": num_bits,
+            "num_tables": num_tables,
+            "moment_dirs": sorted(moment_dirs),
+        }
+
+    return journaled(
         spark,
         _margin_journal_path(master_dir),
-        json.dumps(
-            {
-                "ids": list(ids),
-                "dim": dim,
-                "num_bits": num_bits,
-                "num_tables": num_tables,
-                "moment_dirs": moment_dirs,
-            }
-        ),
+        plan,
+        _margin_erasure(spark, master_dir),
     )
-    out = retract_ids(
-        spark, master_dir, ids, id_col="id", drop_band_sidecar=False
-    )
-    out["moment_dirs_rewritten"] = _purge_margin_moments(
-        spark, master_dir, moment_dirs, dim
-    )
-    out["bucket_dirs_rewritten"] = _purge_margin_sidecars(
-        spark, master_dir, ids, dim, num_bits, num_tables
-    )
-    out["link_rows_removed"] = _purge_linkage_links(spark, master_dir, ids)
-    fsutil.delete(spark, _margin_journal_path(master_dir), recursive=False)
-    return out
 
 
 __all__ = [
+    "dirs_holding",
+    "journaled",
+    "publish_dir",
+    "recount_sidecars",
     "recover_linkage_retraction",
     "recover_margin_retraction",
+    "recover_publish",
     "recover_retraction",
     "recover_setsim_retraction",
+    "replay",
     "retract_from_embedding_corpus",
     "retract_from_image_corpus",
     "retract_from_ingest_corpus",
@@ -707,4 +763,5 @@ __all__ = [
     "retract_from_margin_master",
     "retract_from_setsim_master",
     "retract_ids",
+    "rewrite_dir",
 ]

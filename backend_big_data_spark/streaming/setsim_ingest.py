@@ -54,6 +54,7 @@ from backend_big_data_spark.operators.setsimjoin import (
     token_index,
     token_jaccard_join_indexed,
 )
+from backend_big_data_spark.session import overlap
 from backend_big_data_spark.sources import fsutil
 from backend_big_data_spark.streaming.linkage_ingest import (
     _covered_names,
@@ -318,25 +319,17 @@ def seed_setsim_master_batch(
         os.path.join(master_dir, bdir)
     )
     # tokens and tokfreq both derive from the just-written admitted rows
-    # — independent outputs, so overlap the writes (guide §2.6; the
-    # linkage seed's pattern)
-    from concurrent.futures import ThreadPoolExecutor
-
+    # — independent outputs in disjoint dirs
     toks = token_index(spark.read.parquet(os.path.join(master_dir, bdir)))
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        ft = pool.submit(
-            lambda: toks.write.mode("overwrite").parquet(
-                os.path.join(master_dir, "tokens", bdir)
-            )
-        )
-        ff = pool.submit(
-            lambda: toks.groupBy("token")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(master_dir, "tokfreq", bdir))
-        )
-        ft.result()
-        ff.result()
+    overlap(
+        lambda: toks.write.mode("overwrite").parquet(
+            os.path.join(master_dir, "tokens", bdir)
+        ),
+        lambda: toks.groupBy("token")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .write.mode("overwrite")
+        .parquet(os.path.join(master_dir, "tokfreq", bdir)),
+    )
 
 
 def setsim_ingest_stream(
@@ -390,8 +383,6 @@ def compact_setsim_master(
     `probe_master_tokens`). Sticky width, mixed-layout reader,
     layout-preserving erasure — the linkage gram fold's contract
     verbatim."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from backend_big_data_spark.streaming.maintenance import _fold
     from backend_big_data_spark.text.sampling import stable_hash
 
@@ -400,8 +391,8 @@ def compact_setsim_master(
     tokens_dir = os.path.join(master_dir, "tokens")
     tokfreq_dir = os.path.join(master_dir, "tokfreq")
 
-    # Disjoint directories, independent crash journals — overlap the
-    # three folds (guide §2.6; the linkage compactor's pattern).
+    # Disjoint directories, independent crash journals: the three folds
+    # overlap (the linkage compactor's pattern).
     def _fold_master() -> list[int]:
         return _fold(spark, master_dir, "batch", keep_latest)
 
@@ -455,14 +446,7 @@ def compact_setsim_master(
             ),
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fm = pool.submit(_fold_master)
-        ft = pool.submit(_fold_tokens)
-        ff = pool.submit(_fold_tokfreq)
-        folded = fm.result()
-        ft.result()
-        ff.result()
-    return folded
+    return overlap(_fold_master, _fold_tokens, _fold_tokfreq)[0]
 
 
 __all__ = [

@@ -255,11 +255,12 @@ HEADLINE = [
     # (doc_bpe_merges / doc_bpe_token_stats / supplier_pagerank: 12 resp.
     # 5 driver-synced rounds) and the fixed-gate-scale multimodal
     # near-dup certificates (image/audio/video ≤700 media at every sf)
-    # off the headline; tools/scale_linkage.py measures the round-7
-    # operators' scaling directly. Ditto supplier_communities (4 synced
-    # LPA rounds) and doc_unigram_vocab/doc_unigram_token_stats (EM
-    # rounds with per-round checkpoints); tools/scale_unigram.py
-    # measures the tokenizer's corpus-replication curve.
+    # off the headline; tools/scale_linkage.py (git show f87ca7f:...)
+    # measured the round-7 operators' scaling directly. Ditto
+    # supplier_communities (4 synced LPA rounds) and
+    # doc_unigram_vocab/doc_unigram_token_stats (EM rounds with
+    # per-round checkpoints); tools/scale_unigram.py (same commit)
+    # measured the tokenizer's corpus-replication curve.
 ]
 
 #: min-of-3: the first execution of a heavy operator pays whole-stage-codegen

@@ -8,7 +8,8 @@ gives the optimization loop signal again: the genuinely COMPUTE-BOUND
 operator families run over 1x and 10x replicated sf0.1 inputs (10x of
 sf0.1 ~= sf1 volume), with the repo's established replication
 discipline (entity keys shifted / vocabularies tagged so replicas never
-interact and output mass stays linear — see tools/scale_linkage.py).
+interact and output mass stays linear — see tools/scale_linkage.py
+at f87ca7f).
 
 Families (the verdict's list): part_fuzzy (two-sided Ed-Join + the
 indexed probe), KN trigram model + perplexity, ccnet perplexity
@@ -75,9 +76,9 @@ def replicate_docs(docs: DataFrame, factor: int) -> DataFrame:
 
 def replicate_strings_disjoint(df: DataFrame, factor: int) -> DataFrame:
     """Fuzzy-linkage replicas with a replica letter interleaved every
-    2nd character (tools/scale_linkage.py discipline): replica gram
-    spaces are disjoint, matches stay within-replica, candidate mass
-    grows linearly."""
+    2nd character (the tools/scale_linkage.py discipline, f87ca7f):
+    replica gram spaces are disjoint, matches stay within-replica,
+    candidate mass grows linearly."""
     if factor == 1:
         return df
     reps = F.explode(F.sequence(F.lit(0), F.lit(factor - 1))).alias("rep")
@@ -100,7 +101,7 @@ def replicate_strings_disjoint(df: DataFrame, factor: int) -> DataFrame:
 
 def replicate_tokens_disjoint(df: DataFrame, factor: int) -> DataFrame:
     """Token-set replicas with per-replica token tags
-    (tools/scale_setsim.py discipline)."""
+    (the tools/scale_setsim.py discipline, f87ca7f)."""
     if factor == 1:
         return df
     reps = F.explode(F.sequence(F.lit(0), F.lit(factor - 1))).alias("rep")
