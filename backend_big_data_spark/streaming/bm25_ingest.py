@@ -19,13 +19,14 @@ Per micro-batch of (doc_id, text):
 2. its full postings as ``postings/batch=N`` (term, doc_id, tf, dl) —
    written ``sortWithinPartitions("term")`` so parquet row-group stats
    prune a query-term lookup to the index fraction that matters (the
-   at-rest analog of an index seek; at cluster scale, bucket the fold
-   target by term for shuffle-free lookups),
+   at-rest analog of an index seek; `compact_bm25_index` can fold the
+   postings term-bucketed — `maintenance.POSTINGS_INDEX`),
 3. its stats as ``stats/batch=N`` (one row: __n, __sum_dl).
 
-Readers union the sidecar dirs (`read_bm25_postings` — postings rows
-need no merge, doc ids are disjoint across batches; `read_bm25_stats`
-keyed-sums). The compactor folds all three in lockstep.
+Readers union the live sidecar dirs (`maintenance.read_live`;
+`read_bm25_postings` — postings rows need no merge, doc ids are
+disjoint across batches; `read_bm25_stats` keyed-sums). The compactor
+folds all three in lockstep.
 
 Erasure (`retract_from_bm25_index`) is one `retraction.journaled`
 request. Postings rows are id-keyed, so every postings dir naming an
@@ -46,14 +47,19 @@ maintained by ingestion, never rebuilt.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from backend_big_data_spark.sources import fsutil
-from backend_big_data_spark.streaming.linkage_ingest import _read_dirs
+from backend_big_data_spark.streaming.maintenance import (
+    POSTINGS_INDEX,
+    fold,
+    fold_index,
+    index_width,
+    read_index,
+    read_live,
+)
 from backend_big_data_spark.streaming.retraction import (
     dirs_holding,
     journaled,
@@ -82,33 +88,7 @@ def read_bm25_docs(
     spark: SparkSession, index_dir: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
     """The document corpus of record (doc_id, text), or None."""
-    return _read_dirs(spark, index_dir, exclude_batch)
-
-
-#: Fold metadata marking a TERM-BUCKETED postings layout (written by
-#: ``compact_bm25_index(term_buckets=B)``): folded postings live under
-#: ``postings/batch=K/__tb=<stable_hash(term) % B>/``, so a query's
-#: bucket filter becomes a PARTITION PRUNE — at cluster scale the
-#: at-rest postings read touches only the buckets the query's terms
-#: hash into, a directory-level index seek instead of a full postings
-#: scan (ROADMAP round-11 candidate).
-_TERM_BUCKET_META = "_term_buckets.json"
-
-
-def _term_bucket_count(spark: SparkSession, index_dir: str) -> int | None:
-    raw = fsutil.read_text(
-        spark, os.path.join(index_dir, "postings", _TERM_BUCKET_META)
-    )
-    return json.loads(raw)["n_buckets"] if raw else None
-
-
-def _term_bucket_py(term: str, n_buckets: int) -> int:
-    """Python twin of ``stable_hash(term) % n_buckets`` (md5, 15 hex
-    chars = 60 bits) — the reader computes the query's buckets
-    driver-side; must stay bit-identical to the fold's column expr."""
-    import hashlib
-
-    return int(hashlib.md5(term.encode()).hexdigest()[:15], 16) % n_buckets
+    return read_live(spark, index_dir, exclude=exclude_batch)
 
 
 def read_bm25_postings(
@@ -121,47 +101,20 @@ def read_bm25_postings(
     equals `text.bm25.doc_postings` over the full corpus exactly
     (doc ids are disjoint across batches, so union IS the merge).
 
-    Handles MIXED layouts after a term-bucketed fold: folded dirs carry
-    the ``__tb`` partition column, the un-folded recent tail doesn't —
-    each dir is read separately and unioned by name (null ``__tb`` for
-    the tail). With ``query_terms`` given and a bucketed layout present,
-    the bucket membership filter prunes the folded bulk to the query's
-    own buckets AT THE DIRECTORY LEVEL (PartitionFilters, plan-tested);
-    the flat tail passes through the null arm and is scanned — the right
-    asymmetry: the bulk is pruned, the small recent tail isn't worth a
-    layout."""
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
-
-    base = os.path.join(index_dir, "postings")
-    skip = fold_exclusions(spark, base, "batch")
-    names = [
-        n
-        for n in fsutil.list_subdirs(spark, base, prefix="batch=")
-        if n != f"batch={exclude_batch}" and n not in skip
-    ]
-    if not names:
-        return None
-    frames = [
-        spark.read.option("basePath", base).parquet(os.path.join(base, n))
-        for n in names
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    n_buckets = _term_bucket_count(spark, index_dir)
-    if n_buckets and query_terms and "__tb" in out.columns:
-        buckets = sorted({_term_bucket_py(t, n_buckets) for t in query_terms})
-        out = out.filter(
-            F.col("__tb").isNull() | F.col("__tb").isin(buckets)
-        )
-    return out.drop("__tb") if "__tb" in out.columns else out
+    `maintenance.read_index` over `maintenance.POSTINGS_INDEX` (mixed
+    layouts after `compact_bm25_index` with ``term_buckets``;
+    ``query_terms`` prunes the bucketed bulk to the query's buckets).
+    Keeps the ``batch`` column."""
+    return read_index(
+        spark, index_dir, POSTINGS_INDEX, exclude_batch, probe_keys=query_terms
+    )
 
 
 def read_bm25_stats(
     spark: SparkSession, index_dir: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
     """One (__n, __sum_dl) row keyed-summed across the stats sidecars."""
-    raw = _read_dirs(spark, os.path.join(index_dir, "stats"), exclude_batch)
+    raw = read_live(spark, os.path.join(index_dir, "stats"), exclude=exclude_batch)
     if raw is None:
         return None
     return raw.agg(
@@ -236,65 +189,24 @@ def compact_bm25_index(
     Sidecar folds run unconditionally (the crash-realignment
     discipline).
 
-    ``term_buckets``: lay the folded postings out PARTITIONED BY
-    ``__tb = stable_hash(term) % term_buckets`` — the cluster-scale
-    layout where a query's postings lookup becomes a directory-level
-    partition prune instead of a scan (`read_bm25_postings` consumes the
-    recorded bucket count and prunes automatically). Use with
-    ``keep_latest=0`` to bucket the whole index; batches arriving after
-    the fold stay flat until the next fold (the reader handles the mixed
-    layout). Erasure on a bucketed index goes through
-    `retract_from_bm25_index` unchanged — it folds a flat tail first so
-    the postings rewrite publishes one consistent layout."""
-    from backend_big_data_spark.text.sampling import stable_hash
-    from backend_big_data_spark.streaming.maintenance import _fold
-
-    folded = _fold(spark, index_dir, "batch", keep_latest)
-    p_dir = os.path.join(index_dir, "postings")
-    if term_buckets is None:
-        # sticky layout: once bucketed, later compactions re-bucket at
-        # the recorded width unless the caller overrides
-        term_buckets = _term_bucket_count(spark, index_dir)
-    if fsutil.list_subdirs(spark, p_dir, prefix="batch="):
-        if term_buckets:
-            _fold(
-                spark,
-                p_dir,
-                "batch",
-                keep_latest,
-                reducer=lambda df: df.withColumn(
-                    "__tb",
-                    (stable_hash(F.col("term")) % term_buckets).cast("int"),
-                ).sortWithinPartitions("__tb", "term"),
-                partition_by=("__tb",),
-            )
-            fsutil.write_text_atomic(
-                spark,
-                os.path.join(p_dir, _TERM_BUCKET_META),
-                json.dumps({"n_buckets": int(term_buckets)}),
-            )
-        else:
-            _fold(
-                spark,
-                p_dir,
-                "batch",
-                keep_latest,
-                reducer=lambda df: (
-                    df.drop("__tb") if "__tb" in df.columns else df
-                ).sortWithinPartitions("term"),
-            )
-    s_dir = os.path.join(index_dir, "stats")
-    if fsutil.list_subdirs(spark, s_dir, prefix="batch="):
-        _fold(
-            spark,
-            s_dir,
-            "batch",
-            keep_latest,
-            reducer=lambda df: df.agg(
-                F.sum("__n").alias("__n"),
-                F.sum("__sum_dl").cast("long").alias("__sum_dl"),
-            ),
-        )
+    ``term_buckets``: fold the postings bucketed
+    (`maintenance.fold_index` over `maintenance.POSTINGS_INDEX`), so a
+    query's postings read prunes to its terms' buckets. Erasure on a
+    bucketed index goes through `retract_from_bm25_index` unchanged — it
+    folds a flat tail first so the postings rewrite publishes one
+    consistent layout."""
+    folded = fold(spark, index_dir, "batch", keep_latest)
+    fold_index(spark, index_dir, POSTINGS_INDEX, keep_latest, term_buckets)
+    fold(
+        spark,
+        os.path.join(index_dir, "stats"),
+        "batch",
+        keep_latest,
+        reducer=lambda df: df.agg(
+            F.sum("__n").alias("__n"),
+            F.sum("__sum_dl").cast("long").alias("__sum_dl"),
+        ),
+    )
     return folded
 
 
@@ -315,7 +227,9 @@ def _bm25_erasure(spark: SparkSession, index_dir: str):
             os.path.join(index_dir, "postings"),
             req["ids"],
             partition_by=(
-                ("__tb",) if _term_bucket_count(spark, index_dir) else ()
+                (POSTINGS_INDEX.bucket_col,)
+                if index_width(spark, index_dir, POSTINGS_INDEX)
+                else ()
             ),
             drop_band_sidecar=False,
         )
@@ -344,7 +258,7 @@ def retract_from_bm25_index(
     evidence is gone), so a replay recounts the same stats dirs."""
 
     def plan() -> dict:
-        if _term_bucket_count(spark, index_dir):
+        if index_width(spark, index_dir, POSTINGS_INDEX):
             # A bucketed index may carry a FLAT post-fold tail; the
             # postings rewrite publishes in one layout, so fold the tail
             # into the bucketed bulk first (sticky width — cheap: erasure

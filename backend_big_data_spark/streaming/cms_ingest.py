@@ -164,15 +164,12 @@ def cms_candidate_keys(spark: SparkSession, cells_dir: str) -> DataFrame | None:
     rows), or None when the sink never ran with ``candidates_k``. Input
     to `operators/cms.cms_estimate` for the bounded-state heavy-hitters
     readout — ≤ k·n_batches rows, never vocabulary-sized."""
-    names = fsutil.list_subdirs(spark, cells_dir, prefix="cand=")
-    if not names:
-        return None
-    return (
-        spark.read.option("basePath", cells_dir)
-        .parquet(*[os.path.join(cells_dir, n) for n in names])
-        .select("key")
-        .distinct()
+    from backend_big_data_spark.streaming.maintenance import read_dirs
+
+    cands = read_dirs(
+        spark, cells_dir, fsutil.list_subdirs(spark, cells_dir, prefix="cand=")
     )
+    return None if cands is None else cands.select("key").distinct()
 
 
 def recover_cms_retraction(spark: SparkSession, cells_dir: str) -> None:
@@ -194,22 +191,15 @@ def read_cms_cells(
 
     ``exclude_batch``: drop that batch's own delta — a replayed
     micro-batch must observe the same corpus state it saw first time."""
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
+    from backend_big_data_spark.streaming.maintenance import live_dirs, read_dirs
 
     recover_cms_retraction(spark, cells_dir)
-    skip = fold_exclusions(spark, cells_dir, "delta")
-    names = [
-        n
-        for n in fsutil.list_subdirs(spark, cells_dir, prefix="delta=")
-        if n != f"delta={exclude_batch}" and n not in skip
-    ]
+    names = live_dirs(spark, cells_dir, "delta", exclude_batch)
     if not names:
         return None
     meta = read_cms_meta(spark, cells_dir) or {"group_cols": []}
     g = list(meta["group_cols"])
-    deltas = spark.read.option("basePath", cells_dir).parquet(
-        *[os.path.join(cells_dir, n) for n in names]
-    )
+    deltas = read_dirs(spark, cells_dir, names)
     merged = deltas.groupBy(*g, "r", "c").agg(F.sum("n").alias("n"))
     return merged.select(
         *g,
@@ -275,11 +265,11 @@ def compact_cms_cells(
     pre-summed delta (the reader's keyed merge done once and persisted)
     — bounding reader merge cost by the fold cadence, not total batch
     count. Negate deltas fold through like any other (sum semantics)."""
-    from backend_big_data_spark.streaming.maintenance import _fold
+    from backend_big_data_spark.streaming.maintenance import fold
 
     meta = read_cms_meta(spark, cells_dir) or {"group_cols": []}
     g = list(meta["group_cols"])
-    return _fold(
+    return fold(
         spark,
         cells_dir,
         "delta",

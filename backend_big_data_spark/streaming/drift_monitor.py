@@ -34,8 +34,6 @@ never a silent corruption.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,20 +74,12 @@ def read_corpus_counts(
     surviving corpus — and a NEGATIVE merged count (erasing documents
     never ingested, or twice) raises at evaluation instead of silently
     skewing every downstream readout."""
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
+    from backend_big_data_spark.streaming.maintenance import read_live
 
     recover_drift_retraction(spark, counts_dir)
-    skip = fold_exclusions(spark, counts_dir, "delta")
-    names = [
-        n
-        for n in fsutil.list_subdirs(spark, counts_dir, prefix="delta=")
-        if n != f"delta={exclude_batch}" and n not in skip
-    ]
-    if not names:
+    deltas = read_live(spark, counts_dir, "delta", exclude_batch)
+    if deltas is None:
         return None
-    deltas = spark.read.option("basePath", counts_dir).parquet(
-        *[os.path.join(counts_dir, n) for n in names]
-    )
     merged = deltas.groupBy("tok").agg(F.sum("n").alias("n"))
     return merged.select(
         "tok",

@@ -38,7 +38,6 @@ from backend_big_data_spark.multimodal.phash import (
     dhash_image_batch,
     hamming_near_dup_pairs,
 )
-from backend_big_data_spark.sources import fsutil
 
 
 def read_image_corpus(
@@ -47,19 +46,9 @@ def read_image_corpus(
     """Admitted images so far (media_id, payload, dhash), or None.
     ``exclude_batch`` drops that batch's own directory — a replay must
     probe the corpus state it saw the first time."""
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
+    from backend_big_data_spark.streaming.maintenance import read_live
 
-    skip = fold_exclusions(spark, corpus_dir, "batch")
-    names = [
-        n
-        for n in fsutil.list_subdirs(spark, corpus_dir, prefix="batch=")
-        if n != f"batch={exclude_batch}" and n not in skip
-    ]
-    if not names:
-        return None
-    return spark.read.option("basePath", corpus_dir).parquet(
-        *[os.path.join(corpus_dir, n) for n in names]
-    )
+    return read_live(spark, corpus_dir, exclude=exclude_batch)
 
 
 def _bands(df: DataFrame) -> DataFrame:

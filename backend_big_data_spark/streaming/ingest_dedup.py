@@ -133,19 +133,9 @@ def read_corpus(
     an at-least-once REPLAY of batch N must probe the same corpus state it
     saw the first time, not its own earlier ``batch=N`` output (otherwise
     every prior survivor matches itself and the replay admits ~nothing)."""
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
+    from backend_big_data_spark.streaming.maintenance import read_live
 
-    skip = fold_exclusions(spark, corpus_dir, "batch")
-    names = [
-        n
-        for n in fsutil.list_subdirs(spark, corpus_dir, prefix="batch=")
-        if n != f"batch={exclude_batch}" and n not in skip
-    ]
-    if not names:
-        return None
-    return spark.read.option("basePath", corpus_dir).parquet(
-        *[os.path.join(corpus_dir, n) for n in names]
-    )
+    return read_live(spark, corpus_dir, exclude=exclude_batch)
 
 
 def read_corpus_snapshot(
@@ -160,13 +150,15 @@ def read_corpus_snapshot(
     folded that snapshot away (see `maintenance.snapshot_dir_names`).
     The reproducibility contract for training runs: "the train set as of
     snapshot N" is re-materializable bit-for-bit until a fold crosses N."""
-    from backend_big_data_spark.streaming.maintenance import snapshot_dir_names
+    from backend_big_data_spark.streaming.maintenance import (
+        read_dirs,
+        snapshot_dir_names,
+    )
 
-    names = snapshot_dir_names(spark, corpus_dir, "batch", as_of_batch)
-    if not names:
-        return None
-    return spark.read.option("basePath", corpus_dir).parquet(
-        *[os.path.join(corpus_dir, n) for n in names]
+    return read_dirs(
+        spark,
+        corpus_dir,
+        snapshot_dir_names(spark, corpus_dir, "batch", as_of_batch),
     )
 
 
@@ -178,19 +170,10 @@ def read_corpus_bands(
     ``{corpus_dir}/bands/batch=N``. None when no index exists (corpora
     written before the index shipped fall back to the union path).
     ``exclude_batch`` mirrors `read_corpus`'s replay semantics."""
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
+    from backend_big_data_spark.streaming.maintenance import read_live
 
-    bands_dir = os.path.join(corpus_dir, "bands")
-    skip = fold_exclusions(spark, bands_dir, "batch")
-    names = [
-        n
-        for n in fsutil.list_subdirs(spark, bands_dir, prefix="batch=")
-        if n != f"batch={exclude_batch}" and n not in skip
-    ]
-    if not names:
-        return None
-    return spark.read.option("basePath", bands_dir).parquet(
-        *[os.path.join(bands_dir, n) for n in names]
+    return read_live(
+        spark, os.path.join(corpus_dir, "bands"), exclude=exclude_batch
     )
 
 

@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from backend_big_data_spark.operators.kmv import kmv_estimate, kmv_sketch
-from backend_big_data_spark.sources import fsutil
+from backend_big_data_spark.streaming.maintenance import read_live
 from backend_big_data_spark.streaming.retraction import rewrite_dir
 
 #: Columns of every sidecar row after the sink's group columns (what
@@ -78,12 +78,8 @@ def read_kmv_sidecar(
     ``group_schema`` is the DDL of the sink's group columns (for example
     ``"event_type string"``); the rest of the schema is
     :data:`SIDECAR_COLUMNS`."""
-    names = fsutil.list_subdirs(spark, sidecar_dir, prefix="batch=")
-    if not names:
-        return None
-    reader = spark.read.schema(f"{group_schema}, {SIDECAR_COLUMNS}")
-    return reader.option("basePath", sidecar_dir).parquet(
-        *[os.path.join(sidecar_dir, n) for n in names]
+    return read_live(
+        spark, sidecar_dir, schema=f"{group_schema}, {SIDECAR_COLUMNS}"
     )
 
 

@@ -36,13 +36,13 @@ Scale: per-batch cost = one gram explode over the BATCH, a broadcast
 prefix probe scanning the gram index map-side (no index shuffle — plan
 test asserts no Exchange above its scan), and a candidate-bounded
 levenshtein verify. The master fold-compacts like every family sidecar
-(`maintenance.compact_ingest_corpus` semantics via `compact_linkage_master`).
+(`maintenance.compact_ingest_corpus` semantics via `compact_linkage_master`),
+and its gram index may fold gram-bucketed: the layout and its reader
+are `maintenance.GRAM_INDEX` / `maintenance.read_index`.
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,57 +53,24 @@ from backend_big_data_spark.operators.fuzzyjoin import (
     gram_index,
 )
 from backend_big_data_spark.session import overlap
-from backend_big_data_spark.sources import fsutil
+from backend_big_data_spark.streaming.maintenance import (
+    GRAM_INDEX,
+    fold,
+    fold_index,
+    read_covering,
+    read_index,
+    read_live,
+)
 
 DEFAULT_MAX_DIST = 2
 DEFAULT_Q = 3
-
-#: Gram-bucketed at-rest layout (round 12 — the BM25 ``__tb`` term-bucket
-#: fold pattern applied to the linkage gram index): folded gram dirs live
-#: under ``grams/batch=N/__gb=B`` with ``B = stable_hash(gram) %
-#: n_buckets``, so a probe's at-rest index read prunes to ITS grams'
-#: buckets at the directory level (PartitionFilters) — the listing cost
-#: tracks the probe, not the index size.
-_GRAM_BUCKET_META = "_gram_buckets.json"
-
-
-def _gram_bucket_count(spark: SparkSession, master_dir: str) -> int | None:
-    raw = fsutil.read_text(
-        spark, os.path.join(master_dir, "grams", _GRAM_BUCKET_META)
-    )
-    return json.loads(raw)["n_buckets"] if raw else None
-
-
-def _gram_bucket_py(gram: str, n_buckets: int) -> int:
-    """Python twin of ``stable_hash(gram) % n_buckets`` (md5, 15 hex
-    chars = 60 bits) — the reader computes a probe's buckets
-    driver-side, so the prune is a literal partition filter."""
-    return int(hashlib.md5(gram.encode()).hexdigest()[:15], 16) % n_buckets
-
-
-def _read_dirs(
-    spark: SparkSession, base: str, exclude_batch: int | None
-) -> DataFrame | None:
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
-
-    skip = fold_exclusions(spark, base, "batch")
-    names = [
-        n
-        for n in fsutil.list_subdirs(spark, base, prefix="batch=")
-        if n != f"batch={exclude_batch}" and n not in skip
-    ]
-    if not names:
-        return None
-    return spark.read.option("basePath", base).parquet(
-        *[os.path.join(base, n) for n in names]
-    )
 
 
 def read_master(
     spark: SparkSession, master_dir: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
     """Admitted master entities (id, s) so far, or None."""
-    return _read_dirs(spark, master_dir, exclude_batch)
+    return read_live(spark, master_dir, exclude=exclude_batch)
 
 
 def read_master_grams(
@@ -112,47 +79,15 @@ def read_master_grams(
     exclude_batch: int | None = None,
     probe_grams: list[str] | None = None,
 ) -> DataFrame | None:
-    """The maintained (id, gram) index over the admitted master.
-
-    Handles MIXED layouts after a gram-bucketed fold
-    (`compact_linkage_master` with ``gram_buckets``): folded dirs carry
-    the ``__gb`` partition column, the un-folded recent tail doesn't —
-    each dir is read separately and unioned by name. With
-    ``probe_grams`` given and a bucketed layout present, the bucket
-    membership filter prunes the folded bulk to the probe's own grams'
-    buckets AT THE DIRECTORY LEVEL (PartitionFilters, plan-tested); the
-    flat tail passes through the null arm and is scanned — the right
-    asymmetry: the bulk is pruned, the small recent tail isn't worth a
-    layout. Pruning is result-invariant for any candidate join keyed on
-    the probe's grams: every (id, gram) row with gram ∈ probe_grams
-    lives in a retained bucket by construction."""
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
-
-    base = os.path.join(master_dir, "grams")
-    skip = fold_exclusions(spark, base, "batch")
-    names = [
-        n
-        for n in fsutil.list_subdirs(spark, base, prefix="batch=")
-        if n != f"batch={exclude_batch}" and n not in skip
-    ]
-    if not names:
-        return None
-    frames = [
-        spark.read.option("basePath", base).parquet(os.path.join(base, n))
-        for n in names
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    if "batch" in out.columns:
-        out = out.drop("batch")
-    n_buckets = _gram_bucket_count(spark, master_dir)
-    if n_buckets and probe_grams is not None and "__gb" in out.columns:
-        buckets = sorted({_gram_bucket_py(g, n_buckets) for g in probe_grams})
-        out = out.filter(
-            F.col("__gb").isNull() | F.col("__gb").isin(buckets)
-        )
-    return out.drop("__gb") if "__gb" in out.columns else out
+    """The maintained (id, gram) index over the admitted master:
+    `maintenance.read_index` over `maintenance.GRAM_INDEX` (flat and
+    gram-bucketed dirs mixed after `compact_linkage_master` with
+    ``gram_buckets``; ``probe_grams`` prunes the bucketed bulk to the
+    probe's own grams' buckets)."""
+    out = read_index(
+        spark, master_dir, GRAM_INDEX, exclude_batch, probe_keys=probe_grams
+    )
+    return None if out is None else out.drop("batch")
 
 
 def probe_master_grams(
@@ -184,19 +119,6 @@ def probe_master_grams(
     )
 
 
-def _covered_names(
-    spark: SparkSession, base: str, exclude_batch: int | None
-) -> set[str]:
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
-
-    skip = fold_exclusions(spark, base, "batch")
-    return {
-        n
-        for n in fsutil.list_subdirs(spark, base, prefix="batch=")
-        if n != f"batch={exclude_batch}" and n not in skip
-    }
-
-
 def read_master_gram_freq(
     spark: SparkSession, master_dir: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
@@ -210,17 +132,13 @@ def read_master_gram_freq(
 
     Returns None when the sidecar does not cover every gram directory
     (a pre-sidecar layout, or a retraction that rewrote grams on an old
-    layout) — callers then fall back to aggregating the index. Coverage
-    is name-set equality with ``grams/``: the compactor folds both with
-    the same keep_latest, so folded layouts stay covered."""
-    gf_base = os.path.join(master_dir, "gramfreq")
-    names = _covered_names(spark, gf_base, exclude_batch)
-    if not names or names != _covered_names(
-        spark, os.path.join(master_dir, "grams"), exclude_batch
-    ):
-        return None
-    return spark.read.option("basePath", gf_base).parquet(
-        *[os.path.join(gf_base, n) for n in sorted(names)]
+    layout) — callers then fall back to aggregating the index
+    (`maintenance.read_covering`)."""
+    return read_covering(
+        spark,
+        os.path.join(master_dir, "gramfreq"),
+        os.path.join(master_dir, "grams"),
+        exclude_batch,
     )
 
 
@@ -408,83 +326,27 @@ def compact_linkage_master(
     the misalignment persists forever. Aligned state → metadata-cost
     no-ops.
 
-    ``gram_buckets``: lay the folded gram index out PARTITIONED BY
-    ``__gb = stable_hash(gram) % gram_buckets`` — the cluster-scale
-    layout where a probe's index lookup becomes a directory-level
-    partition prune instead of a full-index scan (`read_master_grams`
-    consumes the recorded bucket count via ``probe_grams`` and prunes
-    automatically; `probe_master_grams` is the serving read). Use with
-    ``keep_latest=0`` to bucket the whole index; batches admitted after
-    the fold stay flat until the next fold (the reader handles the
-    mixed layout). The layout is STICKY: once bucketed, later
-    compactions re-bucket at the recorded width unless overridden.
-    Erasure preserves the layout per directory
-    (`retraction._purge_index_sidecars`)."""
-    from backend_big_data_spark.streaming.maintenance import _fold
-    from backend_big_data_spark.text.sampling import stable_hash
-
-    if gram_buckets is None:
-        gram_buckets = _gram_bucket_count(spark, master_dir)
-    grams_dir = os.path.join(master_dir, "grams")
-    gramfreq_dir = os.path.join(master_dir, "gramfreq")
-
+    ``gram_buckets``: fold the gram index bucketed
+    (`maintenance.fold_index` over `maintenance.GRAM_INDEX`: sticky
+    width, mixed-layout reads, layout-preserving erasure), so
+    `probe_master_grams` prunes to its grams' buckets. Use with
+    ``keep_latest=0`` to bucket the whole index."""
     # The three folds touch DISJOINT directories (master rows, grams,
     # gramfreq), each with its own crash journal, so they overlap. The
     # sidecar folds stay unconditional.
-    def _fold_master() -> list[int]:
-        return _fold(spark, master_dir, "batch", keep_latest)
-
-    def _fold_grams() -> None:
-        if not fsutil.list_subdirs(spark, grams_dir, prefix="batch="):
-            return
-        if gram_buckets:
-            _fold(
-                spark,
-                grams_dir,
-                "batch",
-                keep_latest,
-                reducer=lambda df: (
-                    df.drop("__gb") if "__gb" in df.columns else df
-                )
-                .withColumn(
-                    "__gb",
-                    (stable_hash(F.col("gram")) % gram_buckets).cast("int"),
-                )
-                .sortWithinPartitions("__gb", "gram"),
-                partition_by=("__gb",),
-            )
-            fsutil.write_text_atomic(
-                spark,
-                os.path.join(grams_dir, _GRAM_BUCKET_META),
-                json.dumps({"n_buckets": int(gram_buckets)}),
-            )
-        else:
-            _fold(
-                spark,
-                grams_dir,
-                "batch",
-                keep_latest,
-                reducer=lambda df: (
-                    df.drop("__gb") if "__gb" in df.columns else df
-                ),
-            )
-
-    def _fold_gramfreq() -> None:
-        if not fsutil.list_subdirs(spark, gramfreq_dir, prefix="batch="):
-            return
+    return overlap(
+        lambda: fold(spark, master_dir, "batch", keep_latest),
+        lambda: fold_index(spark, master_dir, GRAM_INDEX, keep_latest, gram_buckets),
         # keyed sum keeps the folded sidecar one row per gram; the
         # reader sums anyway, so this is tightness, not correctness
-        _fold(
+        lambda: fold(
             spark,
-            gramfreq_dir,
+            os.path.join(master_dir, "gramfreq"),
             "batch",
             keep_latest,
-            reducer=lambda df: df.groupBy("gram").agg(
-                F.sum("cnt").alias("cnt")
-            ),
-        )
-
-    return overlap(_fold_master, _fold_grams, _fold_gramfreq)[0]
+            reducer=lambda df: df.groupBy("gram").agg(F.sum("cnt").alias("cnt")),
+        ),
+    )[0]
 
 
 __all__ = [

@@ -51,8 +51,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from backend_big_data_spark.sources import fsutil
-from backend_big_data_spark.streaming.linkage_ingest import _read_dirs
+from backend_big_data_spark.streaming.maintenance import fold, read_live
 from backend_big_data_spark.streaming.retraction import (
     dirs_holding,
     journaled,
@@ -83,7 +82,7 @@ def read_lm_docs(
     spark: SparkSession, corpus_dir: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
     """The document corpus of record (doc_id, text), or None."""
-    return _read_dirs(spark, corpus_dir, exclude_batch)
+    return read_live(spark, corpus_dir, exclude=exclude_batch)
 
 
 def read_lm_bigram_counts(
@@ -91,8 +90,8 @@ def read_lm_bigram_counts(
 ) -> DataFrame | None:
     """(w1, w2, c12) summed across the maintained per-batch sidecars —
     equals the full-corpus bigram counts exactly (additivity)."""
-    raw = _read_dirs(
-        spark, os.path.join(corpus_dir, "bigrams"), exclude_batch
+    raw = read_live(
+        spark, os.path.join(corpus_dir, "bigrams"), exclude=exclude_batch
     )
     if raw is None:
         return None
@@ -103,8 +102,8 @@ def read_lm_trigram_counts(
     spark: SparkSession, corpus_dir: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
     """(w1, w2, w3, c123) summed across the maintained sidecars."""
-    raw = _read_dirs(
-        spark, os.path.join(corpus_dir, "trigrams"), exclude_batch
+    raw = read_live(
+        spark, os.path.join(corpus_dir, "trigrams"), exclude=exclude_batch
     )
     if raw is None:
         return None
@@ -189,31 +188,23 @@ def compact_lm_corpus(
     run unconditionally (the round-9 alignment discipline: a crash
     between the docs fold and the sidecar folds must heal on the next
     call)."""
-    from backend_big_data_spark.streaming.maintenance import _fold
-
-    folded = _fold(spark, corpus_dir, "batch", keep_latest)
-    bi_dir = os.path.join(corpus_dir, "bigrams")
-    if fsutil.list_subdirs(spark, bi_dir, prefix="batch="):
-        _fold(
-            spark,
-            bi_dir,
-            "batch",
-            keep_latest,
-            reducer=lambda df: df.groupBy("w1", "w2").agg(
-                F.sum("c12").alias("c12")
-            ),
-        )
-    tri_dir = os.path.join(corpus_dir, "trigrams")
-    if fsutil.list_subdirs(spark, tri_dir, prefix="batch="):
-        _fold(
-            spark,
-            tri_dir,
-            "batch",
-            keep_latest,
-            reducer=lambda df: df.groupBy("w1", "w2", "w3").agg(
-                F.sum("c123").alias("c123")
-            ),
-        )
+    folded = fold(spark, corpus_dir, "batch", keep_latest)
+    fold(
+        spark,
+        os.path.join(corpus_dir, "bigrams"),
+        "batch",
+        keep_latest,
+        reducer=lambda df: df.groupBy("w1", "w2").agg(F.sum("c12").alias("c12")),
+    )
+    fold(
+        spark,
+        os.path.join(corpus_dir, "trigrams"),
+        "batch",
+        keep_latest,
+        reducer=lambda df: df.groupBy("w1", "w2", "w3").agg(
+            F.sum("c123").alias("c123")
+        ),
+    )
     return folded
 
 

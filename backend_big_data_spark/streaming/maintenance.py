@@ -2,7 +2,9 @@
 ingest sinks' docstrings promise (`sources/compaction.py` is the
 general-purpose file compactor; this module folds the sinks' SEMANTIC
 log structure: ``batch=N`` survivor dirs, ``bands/batch=N`` index rows,
-``delta=N`` token-count deltas).
+``delta=N`` token-count deltas) — and the one owner of every rule about
+the on-disk layout of a maintained directory: which dirs a reader
+unions, how it reads them, and the bucketed-index layout.
 
 Why fold at all: every per-batch directory adds a file-listing + footer
 cost to every subsequent probe, and the reader-side merge of the drift
@@ -25,7 +27,7 @@ copy is complete is a one-line journal (``_fold_journal_{prefix}.json``)
 committed atomically, after which the publish + source deletion proceed.
 Every state an interruption can leave behind is resolvable from the two
 markers alone, and :func:`recover_fold` — called by the compactors
-themselves and by every sidecar reader before listing — resolves it:
+themselves — resolves it:
 
 * temp dir present, **no journal** → the folded copy may be partial;
   roll BACK (delete the temp dir; all source dirs are still intact).
@@ -55,6 +57,31 @@ its publish and its last source delete: a reader may briefly see some
 folded content twice (over-count / re-verify — the safe direction).
 No interleaving ever makes folded content silently disappear.
 
+The reader rule: every maintained-state reader in ``streaming/`` reads
+:func:`live_dirs` — the ``{prefix}=N`` dirs on disk, minus the mask
+above, minus the replaying batch's own dir — through :func:`read_dirs`,
+one ``basePath`` read per directory layout (flat, bucketed fold,
+cluster-partitioned) unioned by name, so the ``{prefix}`` partition
+column surfaces and a mixed layout never reaches a single multi-path
+read. :func:`read_live` is the two together; :func:`read_covering` adds
+the "summary sidecar covers its directory" check.
+
+Bucketed indexes: an (id, key) index may be folded PARTITIONED BY a
+bucket column ``stable_hash(key) % width`` (md5, 60 bits), so a probe's
+read prunes to its own keys' buckets at the directory level. The width
+is recorded in a width file (``{"n_buckets": width}``) beside the
+``batch=N`` dirs and is sticky across folds; dirs admitted after a
+bucketed fold stay flat until the next one. :class:`BucketedIndex`
+names one family's layout; :func:`read_index`, :func:`fold_index`,
+:func:`index_width`, :func:`bucket_of` and :func:`bucket_column` are the
+only code that knows it.
+
+| layout           | index directory        | key → bucket column  | width file             |
+|------------------|------------------------|----------------------|------------------------|
+| `GRAM_INDEX`     | ``{master}/grams``     | ``gram`` → ``__gb``  | ``_gram_buckets.json`` |
+| `TOKEN_INDEX`    | ``{master}/tokens``    | ``token`` → ``__tb`` | ``_token_buckets.json``|
+| `POSTINGS_INDEX` | ``{index}/postings``   | ``term`` → ``__tb``  | ``_term_buckets.json`` |
+
 Bloom sidecar: folding renames directories, not fingerprints — the
 bitmap's bits are unchanged. The sidecar's covered-batch list is
 rewritten to the post-fold directory set so `load_corpus_bloom` keeps
@@ -66,13 +93,18 @@ slower once.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
+from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backend_big_data_spark.sources import fsutil
+from backend_big_data_spark.text.sampling import stable_hash
 
 
 def _batch_ids(spark: SparkSession, base: str, prefix: str) -> list[int]:
@@ -101,6 +133,18 @@ def fold_history(spark: SparkSession, base: str, prefix: str) -> dict[int, list[
     if text is None:
         return {}
     return {int(k): v for k, v in json.loads(text)["folds"].items()}
+
+
+def _with_fold(hist: dict[int, list[int]], meta: dict) -> dict[int, list[int]]:
+    """``hist`` after the journaled fold ``meta``: its source ids' coverage
+    moves onto the published id. Computed from the prior history, not the
+    meta, so journals written before the history sidecar existed still
+    fold their constituents' coverage correctly."""
+    covered = sorted({o for i in meta["delete"] for o in hist.get(i, [i])})
+    for i in meta["delete"]:
+        hist.pop(i, None)
+    hist[meta["publish"]] = covered
+    return hist
 
 
 def _finish_fold(spark: SparkSession, base: str, prefix: str, meta: dict) -> None:
@@ -132,14 +176,8 @@ def _finish_fold(spark: SparkSession, base: str, prefix: str, meta: dict) -> Non
             fsutil.delete(spark, os.path.join(base, f"{prefix}={i}"))
     # Record lineage BEFORE dropping the journal: a crash in between
     # re-runs this whole function (idempotent — the history update is a
-    # pure key replacement). Computed from the prior history, not the
-    # meta, so journals written before this sidecar existed still fold
-    # their constituents' coverage correctly.
-    hist = fold_history(spark, base, prefix)
-    covered = sorted({o for i in meta["delete"] for o in hist.get(i, [i])})
-    for i in meta["delete"]:
-        hist.pop(i, None)
-    hist[meta["publish"]] = covered
+    # pure key replacement).
+    hist = _with_fold(fold_history(spark, base, prefix), meta)
     fsutil.write_text_atomic(
         spark,
         _history_path(base, prefix),
@@ -174,6 +212,18 @@ def recover_fold(spark: SparkSession, base: str, prefix: str) -> str | None:
     return "back" if stranded else None
 
 
+def _published_fold(spark: SparkSession, base: str, prefix: str) -> dict | None:
+    """The journal of a fold interrupted AFTER its publish (temp dir
+    gone), else None — the one crash state a reader must correct for."""
+    jtext = fsutil.read_text(spark, _journal_path(base, prefix))
+    if jtext is None:
+        return None
+    meta = json.loads(jtext)
+    if fsutil.exists(spark, os.path.join(base, meta["tmp"])):
+        return None  # unpublished: the source dirs are authoritative
+    return meta
+
+
 def fold_exclusions(spark: SparkSession, base: str, prefix: str) -> set[str]:
     """Directory names a reader must SKIP to stay exact when a fold was
     interrupted (non-mutating; see the module docstring's case table).
@@ -184,15 +234,10 @@ def fold_exclusions(spark: SparkSession, base: str, prefix: str) -> set[str]:
     state the mask is empty. Cost: one small-file probe per read, plus
     one existence check only when a journal is actually present.
     """
-    jtext = fsutil.read_text(spark, _journal_path(base, prefix))
-    if jtext is None:
+    meta = _published_fold(spark, base, prefix)
+    if meta is None:
         return set()
-    meta = json.loads(jtext)
-    if fsutil.exists(spark, os.path.join(base, meta["tmp"])):
-        return set()  # unpublished: the source dirs are authoritative
-    return {
-        f"{prefix}={i}" for i in meta["delete"] if i != meta["publish"]
-    }
+    return {f"{prefix}={i}" for i in meta["delete"] if i != meta["publish"]}
 
 
 def _effective_history(
@@ -204,17 +249,8 @@ def _effective_history(
     the pending update in memory so snapshot reads stay exact in every
     crash state `fold_exclusions` can mask."""
     hist = fold_history(spark, base, prefix)
-    jtext = fsutil.read_text(spark, _journal_path(base, prefix))
-    if jtext is None:
-        return hist
-    meta = json.loads(jtext)
-    if fsutil.exists(spark, os.path.join(base, meta["tmp"])):
-        return hist  # unpublished: source dirs are authoritative
-    covered = sorted({o for i in meta["delete"] for o in hist.get(i, [i])})
-    for i in meta["delete"]:
-        hist.pop(i, None)
-    hist[meta["publish"]] = covered
-    return hist
+    meta = _published_fold(spark, base, prefix)
+    return hist if meta is None else _with_fold(hist, meta)
 
 
 def snapshot_dir_names(
@@ -227,11 +263,8 @@ def snapshot_dir_names(
     that snapshot no longer exists on disk (the same trade Delta-style
     VACUUM makes; size ``keep_latest`` to the snapshot horizon)."""
     hist = _effective_history(spark, base, prefix)
-    skip = fold_exclusions(spark, base, prefix)
     out = []
-    for name in fsutil.list_subdirs(spark, base, prefix=prefix + "="):
-        if name in skip:
-            continue
+    for name in live_dirs(spark, base, prefix):
         i = int(name.split("=", 1)[1])
         covered = hist.get(i, [i])
         if covered[-1] <= as_of:
@@ -245,7 +278,118 @@ def snapshot_dir_names(
     return out
 
 
-def _fold(
+def live_dirs(
+    spark: SparkSession,
+    base: str,
+    prefix: str = "batch",
+    exclude: int | None = None,
+) -> list[str]:
+    """The reader rule: the sorted ``{prefix}=N`` dir names a reader
+    unions — every one on disk, minus the superseded sources of a
+    published but unfinished fold (:func:`fold_exclusions`), minus
+    ``{prefix}={exclude}``: an at-least-once REPLAY of batch N must read
+    the state its first attempt saw, not its own earlier output.
+    Non-mutating."""
+    skip = fold_exclusions(spark, base, prefix)
+    if exclude is not None:
+        skip.add(f"{prefix}={exclude}")
+    return [
+        n
+        for n in fsutil.list_subdirs(spark, base, prefix=prefix + "=")
+        if n not in skip
+    ]
+
+
+def _glob(spark: SparkSession, pattern: str) -> list[tuple[str, str]]:
+    """(parent dir name, name) of every path matching a Hadoop glob."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(pattern)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    return [
+        (st.getPath().getParent().getName(), st.getPath().getName())
+        for st in fs.globStatus(path) or []
+    ]
+
+
+def _layout_groups(
+    spark: SparkSession, base: str, names: list[str]
+) -> list[list[str]]:
+    """``names`` grouped by directory layout — the set of partition
+    columns inside each dir — in first-appearance order. A dir that holds
+    no data file (an empty partitioned write leaves only ``_SUCCESS``)
+    joins no group when another dir has a partition column: it holds no
+    row, and Spark cannot infer a schema from it alone. Metadata only:
+    one glob, plus one more when flat and partitioned dirs mix."""
+    if len(names) < 2:
+        return [list(names)]
+
+    def under(group: list[str]) -> str:
+        escaped = re.sub(r"([\\{}\[\]*?])", r"\\\1", base)
+        return f"{escaped}/{{{','.join(group)}}}"
+
+    cols: dict[str, set[str]] = {}
+    for parent, name in _glob(spark, under(names) + "/*=*"):
+        cols.setdefault(parent, set()).add(name.split("=", 1)[0])
+    if not cols:
+        return [list(names)]
+    flat = [n for n in names if n not in cols]
+    with_data = {p for p, _ in _glob(spark, under(flat) + "/[!_.]*")} if flat else set()
+    groups: dict[frozenset[str], list[str]] = {}
+    for n in names:
+        if n in cols or n in with_data:
+            groups.setdefault(frozenset(cols.get(n, ())), []).append(n)
+    return list(groups.values())
+
+
+def read_dirs(
+    spark: SparkSession, base: str, names: list[str], schema: str | None = None
+) -> DataFrame | None:
+    """The named dirs under ``base`` as one frame, or None for no names:
+    one ``basePath`` read per directory layout, unioned by name (a
+    layout's missing partition column reads as null). The ``{prefix}``
+    partition column surfaces. ``schema`` (DDL including the partition
+    columns) skips inference."""
+    if not names:
+        return None
+
+    def read(group: list[str]) -> DataFrame:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.option("basePath", base).parquet(
+            *[os.path.join(base, n) for n in group]
+        )
+
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        map(read, _layout_groups(spark, base, names)),
+    )
+
+
+def read_live(
+    spark: SparkSession,
+    base: str,
+    prefix: str = "batch",
+    exclude: int | None = None,
+    schema: str | None = None,
+) -> DataFrame | None:
+    """:func:`read_dirs` over :func:`live_dirs` — the read every
+    maintained-state reader serves."""
+    return read_dirs(spark, base, live_dirs(spark, base, prefix, exclude), schema)
+
+
+def read_covering(
+    spark: SparkSession, base: str, of: str, exclude: int | None = None
+) -> DataFrame | None:
+    """A summary sidecar (per-key counts, moments) under ``base``, read
+    only when its live ``batch=N`` dirs are exactly those of ``of``, the
+    directory it summarises; else None, and callers fall back to
+    computing from ``of``. The compactors fold both with the same
+    ``keep_latest``, so folded layouts stay covered."""
+    names = live_dirs(spark, base, exclude=exclude)
+    if not names or names != live_dirs(spark, of, exclude=exclude):
+        return None
+    return read_dirs(spark, base, names)
+
+
+def fold(
     spark: SparkSession,
     base: str,
     prefix: str,
@@ -255,32 +399,24 @@ def _fold(
 ) -> list[int]:
     """Fold all but the ``keep_latest`` newest ``{prefix}=N`` dirs under
     ``base`` into the oldest folded id's directory. Returns folded ids
-    (empty when there is nothing to do). ``reducer`` post-processes the
-    unioned frame (the drift counts' keyed sum). ``partition_by`` lays
-    the folded directory out by those columns (the BM25 term-bucketed
-    fold) — the journal/recovery protocol is layout-agnostic (dir-level
-    renames), so crash semantics are unchanged."""
+    (empty when there is nothing to do — a missing or single-dir base
+    costs metadata calls only). ``reducer`` post-processes the unioned
+    frame (the drift counts' keyed sum). ``partition_by`` lays the folded
+    directory out by those columns (:func:`fold_index`) — the
+    journal/recovery protocol is layout-agnostic (dir-level renames), so
+    crash semantics are unchanged."""
     recover_fold(spark, base, prefix)
     ids = _batch_ids(spark, base, prefix)
-    fold = ids[: len(ids) - keep_latest] if keep_latest else ids
-    if len(fold) < 2:
+    folding = ids[: len(ids) - keep_latest] if keep_latest else ids
+    if len(folding) < 2:
         return []
-    paths = [os.path.join(base, f"{prefix}={i}") for i in fold]
-    # no basePath: the {prefix}=N component must NOT surface as a
-    # partition column, or the rewrite would bake it into the data files
-    # and collide with the readers' partition-discovered column.
-    # Per-directory reads + unionByName: folded dirs may carry their own
-    # partition layout (the BM25 term-bucketed fold) while newer dirs are
-    # flat — a single multi-path read would reject the mixed structure.
-    frames = [spark.read.parquet(p) for p in paths]
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f, allowMissingColumns=True)
-    if prefix in df.columns:
-        df = df.drop(prefix)
+    # the {prefix}=N partition column must not be baked into the
+    # rewritten data files, where it would collide with the readers'
+    # partition-discovered column
+    df = read_dirs(spark, base, [f"{prefix}={i}" for i in folding]).drop(prefix)
     if reducer is not None:
         df = reducer(df)
-    tmp_name = f"_compacting_{prefix}_{fold[0]}"
+    tmp_name = f"_compacting_{prefix}_{folding[0]}"
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -288,10 +424,113 @@ def _fold(
     # Journal AFTER the folded copy is fully on disk: its presence is the
     # commit point. Crash before this line → rollback (sources intact);
     # crash after → roll-forward (tmp is complete by construction).
-    meta = {"prefix": prefix, "publish": fold[0], "tmp": tmp_name, "delete": fold}
+    meta = {"prefix": prefix, "publish": folding[0], "tmp": tmp_name, "delete": folding}
     fsutil.write_text_atomic(spark, _journal_path(base, prefix), json.dumps(meta))
     _finish_fold(spark, base, prefix, meta)
-    return fold
+    return folding
+
+
+@dataclass(frozen=True)
+class BucketedIndex:
+    """One family's bucketed (id, key) index layout (module table)."""
+
+    subdir: str
+    key_col: str
+    bucket_col: str
+    width_file: str
+
+
+GRAM_INDEX = BucketedIndex("grams", "gram", "__gb", "_gram_buckets.json")
+TOKEN_INDEX = BucketedIndex("tokens", "token", "__tb", "_token_buckets.json")
+POSTINGS_INDEX = BucketedIndex("postings", "term", "__tb", "_term_buckets.json")
+
+
+def index_width(
+    spark: SparkSession, owner_dir: str, index: BucketedIndex
+) -> int | None:
+    """The recorded bucket count of ``{owner_dir}/{index.subdir}``, or
+    None when it was never folded bucketed."""
+    raw = fsutil.read_text(
+        spark, os.path.join(owner_dir, index.subdir, index.width_file)
+    )
+    return json.loads(raw)["n_buckets"] if raw else None
+
+
+def bucket_of(key: str, n_buckets: int) -> int:
+    """Python twin of :func:`bucket_column` (``stable_hash``: md5, 15 hex
+    chars = 60 bits) — readers compute a probe's buckets driver-side, so
+    the prune is a literal partition filter."""
+    return int(hashlib.md5(key.encode()).hexdigest()[:15], 16) % n_buckets
+
+
+def bucket_column(index: BucketedIndex, n_buckets: int) -> Column:
+    """The bucket a row of ``index`` lives in at width ``n_buckets``."""
+    return (stable_hash(F.col(index.key_col)) % n_buckets).cast("int")
+
+
+def read_index(
+    spark: SparkSession,
+    owner_dir: str,
+    index: BucketedIndex,
+    exclude: int | None = None,
+    probe_keys: list[str] | None = None,
+) -> DataFrame | None:
+    """The live rows of ``{owner_dir}/{index.subdir}`` with their
+    ``batch`` column, whatever mix of flat and bucketed dirs it holds.
+    With ``probe_keys`` (any list, an empty one too) and a recorded
+    width, bucketed dirs prune to the probe keys' buckets AT THE
+    DIRECTORY LEVEL (PartitionFilters); flat dirs pass the null arm and
+    are scanned — the bulk is pruned, the small recent tail isn't worth
+    a layout. Pruning is result-invariant for any join keyed on the
+    probe keys: every row of such a key lives in a retained bucket."""
+    out = read_live(spark, os.path.join(owner_dir, index.subdir), exclude=exclude)
+    if out is None or index.bucket_col not in out.columns:
+        return out
+    n_buckets = index_width(spark, owner_dir, index)
+    if n_buckets and probe_keys is not None:
+        bucket = F.col(index.bucket_col)
+        keep = sorted({bucket_of(k, n_buckets) for k in probe_keys})
+        out = out.filter(bucket.isNull() | bucket.isin(keep))
+    return out.drop(index.bucket_col)
+
+
+def fold_index(
+    spark: SparkSession,
+    owner_dir: str,
+    index: BucketedIndex,
+    keep_latest: int,
+    n_buckets: int | None = None,
+) -> None:
+    """Fold the commit-stable prefix of ``{owner_dir}/{index.subdir}``,
+    PARTITIONED BY its bucket column when ``n_buckets`` is set (the width
+    is then recorded) and flat otherwise. The width is STICKY:
+    ``n_buckets=None`` refolds at the recorded width. Either fold sorts
+    its files by key (within each bucket), so row-group stats prune a
+    key lookup."""
+    base = os.path.join(owner_dir, index.subdir)
+    if not fsutil.list_subdirs(spark, base, prefix="batch="):
+        return  # no index yet: record no width either
+    if n_buckets is None:
+        n_buckets = index_width(spark, owner_dir, index)
+    b, k = index.bucket_col, index.key_col
+    if not n_buckets:
+        fold(
+            spark, base, "batch", keep_latest,
+            reducer=lambda df: df.drop(b).sortWithinPartitions(k),
+        )
+        return
+    fold(
+        spark, base, "batch", keep_latest,
+        reducer=lambda df: df.withColumn(
+            b, bucket_column(index, n_buckets)
+        ).sortWithinPartitions(b, k),
+        partition_by=(b,),
+    )
+    fsutil.write_text_atomic(
+        spark,
+        os.path.join(base, index.width_file),
+        json.dumps({"n_buckets": int(n_buckets)}),
+    )
 
 
 def compact_ingest_corpus(
@@ -307,12 +546,10 @@ def compact_ingest_corpus(
         save_corpus_bloom,
     )
 
-    folded = _fold(spark, corpus_dir, "batch", keep_latest)
+    folded = fold(spark, corpus_dir, "batch", keep_latest)
     if not folded:
         return []
-    bands_dir = os.path.join(corpus_dir, "bands")
-    if fsutil.list_subdirs(spark, bands_dir, prefix="batch="):
-        _fold(spark, bands_dir, "batch", keep_latest)
+    fold(spark, os.path.join(corpus_dir, "bands"), "batch", keep_latest)
     if fsutil.read_text(spark, os.path.join(corpus_dir, "_fp_bloom.json")):
         words, _covered = load_corpus_bloom(spark, corpus_dir)
         if words is not None:
@@ -331,7 +568,7 @@ def compact_quality_grid(
     """Fold the commit-stable prefix of the quality monitor's ``delta=N``
     calibration-grid log into one pre-summed grid (the reader's keyed
     merge done once and persisted). Returns the folded batch ids."""
-    return _fold(
+    return fold(
         spark,
         grid_dir,
         "delta",
@@ -348,7 +585,7 @@ def compact_drift_counts(
     """Fold the commit-stable prefix of the drift monitor's ``delta=N``
     token-count log into one pre-summed delta — the reader's keyed merge
     done once and persisted. Returns the folded batch ids."""
-    return _fold(
+    return fold(
         spark,
         counts_dir,
         "delta",
@@ -358,11 +595,25 @@ def compact_drift_counts(
 
 
 __all__ = [
+    "GRAM_INDEX",
+    "POSTINGS_INDEX",
+    "TOKEN_INDEX",
+    "BucketedIndex",
+    "bucket_column",
+    "bucket_of",
     "compact_drift_counts",
     "compact_ingest_corpus",
     "compact_quality_grid",
+    "fold",
     "fold_exclusions",
     "fold_history",
+    "fold_index",
+    "index_width",
+    "live_dirs",
+    "read_covering",
+    "read_dirs",
+    "read_index",
+    "read_live",
     "recover_fold",
     "snapshot_dir_names",
 ]

@@ -51,8 +51,11 @@ from pyspark.sql import functions as F
 
 from backend_big_data_spark.similarity.ann import _md5_planes, cosine_sim
 from backend_big_data_spark.similarity.mining import _bucketed, _margin_scores
-from backend_big_data_spark.sources import fsutil
-from backend_big_data_spark.streaming.linkage_ingest import _read_dirs
+from backend_big_data_spark.streaming.maintenance import (
+    fold,
+    read_covering,
+    read_live,
+)
 
 DEFAULT_NUM_BITS = 6
 DEFAULT_NUM_TABLES = 6
@@ -86,14 +89,16 @@ def read_margin_master(
     spark: SparkSession, master_dir: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
     """Admitted master entities (id, embedding) so far, or None."""
-    return _read_dirs(spark, master_dir, exclude_batch)
+    return read_live(spark, master_dir, exclude=exclude_batch)
 
 
 def read_master_buckets(
     spark: SparkSession, master_dir: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
     """The maintained (id, bucket) LSH index over the admitted master."""
-    return _read_dirs(spark, os.path.join(master_dir, "buckets"), exclude_batch)
+    return read_live(
+        spark, os.path.join(master_dir, "buckets"), exclude=exclude_batch
+    )
 
 
 def read_master_moments(
@@ -113,21 +118,17 @@ def read_master_moments(
     lost rows (a master-only fold in the compaction crash window) would
     finish to a silently wrong covariance. On any mismatch callers fall
     back to the full-scan covariance (result-invariant, just slower)."""
-    from backend_big_data_spark.streaming.linkage_ingest import _covered_names
-
-    mo_base = os.path.join(master_dir, "moments")
-    names = _covered_names(spark, mo_base, exclude_batch)
-    if not names or names != _covered_names(spark, master_dir, exclude_batch):
-        return None
-    moments = spark.read.option("basePath", mo_base).parquet(
-        *[os.path.join(mo_base, n) for n in sorted(names)]
+    moments = read_covering(
+        spark, os.path.join(master_dir, "moments"), master_dir, exclude_batch
     )
+    if moments is None:
+        return None
     n_sidecar = (
         moments.filter((F.col("i") == -1) & (F.col("j") == -1))
         .agg(F.sum("v"))
         .collect()[0][0]
     )
-    master = _read_dirs(spark, master_dir, exclude_batch)
+    master = read_margin_master(spark, master_dir, exclude_batch)
     if master is None or n_sidecar is None or int(n_sidecar) != master.count():
         return None
     return moments
@@ -300,23 +301,15 @@ def compact_margin_master(
     in lockstep (links stay per-batch — results, not probe state). The
     sidecar fold runs UNCONDITIONALLY for the `compact_setsim_master`
     crash-realignment reason."""
-    from backend_big_data_spark.streaming.maintenance import _fold
-
-    folded = _fold(spark, master_dir, "batch", keep_latest)
-    buckets_dir = os.path.join(master_dir, "buckets")
-    if fsutil.list_subdirs(spark, buckets_dir, prefix="batch="):
-        _fold(spark, buckets_dir, "batch", keep_latest)
-    moments_dir = os.path.join(master_dir, "moments")
-    if fsutil.list_subdirs(spark, moments_dir, prefix="batch="):
-        _fold(
-            spark,
-            moments_dir,
-            "batch",
-            keep_latest,
-            reducer=lambda df: df.groupBy("i", "j").agg(
-                F.sum("v").alias("v")
-            ),
-        )
+    folded = fold(spark, master_dir, "batch", keep_latest)
+    fold(spark, os.path.join(master_dir, "buckets"), "batch", keep_latest)
+    fold(
+        spark,
+        os.path.join(master_dir, "moments"),
+        "batch",
+        keep_latest,
+        reducer=lambda df: df.groupBy("i", "j").agg(F.sum("v").alias("v")),
+    )
     return folded
 
 

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backend_big_data_spark.operators.qsketch import bottomk_sample
-from backend_big_data_spark.sources import fsutil
+from backend_big_data_spark.streaming.maintenance import read_live
 from backend_big_data_spark.streaming.retraction import rewrite_dir
 
 
@@ -67,12 +67,7 @@ def read_qsketch_sidecar(
     spark: SparkSession, sidecar_dir: str
 ) -> DataFrame | None:
     """All per-batch sample rows, or None before the first batch."""
-    names = fsutil.list_subdirs(spark, sidecar_dir, prefix="batch=")
-    if not names:
-        return None
-    return spark.read.option("basePath", sidecar_dir).parquet(
-        *[os.path.join(sidecar_dir, n) for n in names]
-    )
+    return read_live(spark, sidecar_dir)
 
 
 def qsketch_merged_readout(

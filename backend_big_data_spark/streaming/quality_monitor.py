@@ -37,17 +37,11 @@ def read_grid(
 ) -> DataFrame | None:
     """Merged calibration grid from every ``delta=N`` directory (keyed
     sum — folding deltas is semantics-preserving). None when empty."""
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
+    from backend_big_data_spark.streaming.maintenance import read_live
 
-    skip = fold_exclusions(spark, grid_dir, "delta")
-    dirs = [
-        n
-        for n in fsutil.list_subdirs(spark, grid_dir, prefix="delta=")
-        if n != f"delta={exclude_batch}" and n not in skip
-    ]
-    if not dirs:
+    df = read_live(spark, grid_dir, "delta", exclude_batch)
+    if df is None:
         return None
-    df = spark.read.parquet(*[f"{grid_dir}/{d}" for d in dirs])
     return df.groupBy("source", "bucket").agg(
         F.sum("n_docs").alias("n_docs"), F.sum("toks").alias("toks")
     )

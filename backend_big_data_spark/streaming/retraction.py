@@ -150,35 +150,23 @@ def dirs_holding(
     """``{prefix}=N`` dir name → number of its rows naming one of
     ``ids``, for the dirs under ``base`` that hold any. Every dir on disk
     is probed, a superseded fold source too: erasure must reach every
-    copy. One column-pruned, partition-discovered probe per directory
-    LAYOUT: flat dirs and dirs partitioned by a column (a bucketed fold,
-    the cluster-partitioned embedding corpus) are probed separately,
-    since a single multi-path read rejects the mixed structure."""
+    copy. One column-pruned, partition-discovered probe over
+    `maintenance.read_dirs` (one read per directory LAYOUT: flat dirs
+    and dirs partitioned by a column — a bucketed fold, the
+    cluster-partitioned embedding corpus — may mix)."""
+    from backend_big_data_spark.streaming.maintenance import read_dirs
+
     names = fsutil.list_subdirs(spark, base, prefix=f"{prefix}=")
     if not names or not ids:
         return {}
-    layouts: dict[frozenset, list[str]] = {}
-    for n in names:
-        part_cols = frozenset(
-            d.split("=", 1)[0]
-            for d in fsutil.list_subdirs(spark, os.path.join(base, n))
-            if "=" in d
-        )
-        layouts.setdefault(part_cols, []).append(n)
-    lits = [F.lit(i) for i in ids]
-    hits: dict[str, int] = {}
-    for group in layouts.values():
-        probe = spark.read.option("basePath", base).parquet(
-            *[os.path.join(base, n) for n in group]
-        )
-        hits.update(
-            (f"{prefix}={r[prefix]}", r["n"])
-            for r in probe.filter(F.col(id_col).isin(lits))
-            .groupBy(prefix)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-    return hits
+    probe = read_dirs(spark, base, names)
+    return {
+        f"{prefix}={r[prefix]}": r["n"]
+        for r in probe.filter(F.col(id_col).isin([F.lit(i) for i in ids]))
+        .groupBy(prefix)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
 
 
 def rewrite_dir(
@@ -399,11 +387,9 @@ def _purge_index_sidecars(
     master_dir: str,
     ids: list,
     index_name: str,
-    freq_name: str,
-    key_col: str,
     rebuild,
-    bucket_col: str | None = None,
-    n_buckets: int | None = None,
+    layout=None,
+    freq_name: str | None = None,
 ) -> list[str]:
     """Rewrite every inverted-index/frequency sidecar directory still
     naming a retracted id, from its (already rewritten) master directory
@@ -414,37 +400,41 @@ def _purge_index_sidecars(
     key) index rows are the durable marker that a directory's sidecars
     are not yet purged, so the marker must be destroyed last.
 
-    ``rebuild(master_df) -> (id, key_col) index frame``; the frequency
-    sidecar is its per-``key_col`` count. Shared by the linkage master
-    (grams/gramfreq), the setsim master (tokens/tokfreq) and the margin
-    master (buckets).
+    ``rebuild(master_df) -> (id, key) index frame``. The linkage and
+    setsim masters pass their ``layout`` (`maintenance.GRAM_INDEX` /
+    `maintenance.TOKEN_INDEX`) and frequency sidecar (``gramfreq`` /
+    ``tokfreq``, the per-key count of the index); the margin master's
+    ``buckets`` index has neither.
 
-    ``bucket_col``/``n_buckets``: bucketed-layout support (an index
-    after a bucketed fold, recorded width ``n_buckets``): the rewrite of
-    a dir carrying the bucket partition column recomputes ``bucket_col =
-    stable_hash(key_col) % n_buckets`` and publishes PARTITIONED BY it —
+    With a ``layout`` of recorded width, the rewrite of a dir carrying
+    the bucket partition column recomputes the bucket
+    (`maintenance.bucket_column`) and publishes PARTITIONED BY it —
     erasure preserves each directory's own layout (the probe,
     :func:`dirs_holding`, already reads each layout separately)."""
-    from backend_big_data_spark.text.sampling import stable_hash
+    from backend_big_data_spark.streaming.maintenance import (
+        bucket_column,
+        index_width,
+    )
 
     index_base = os.path.join(master_dir, index_name)
+    n_buckets = index_width(spark, master_dir, layout) if layout else None
     lits = [F.lit(i) for i in ids]
     hit = sorted(dirs_holding(spark, index_base, ids))
     for name in hit:
         master_path = os.path.join(master_dir, name)
-        freq_rel = os.path.join(freq_name, name)
         index_rel = os.path.join(index_name, name)
         bucketed = bool(n_buckets) and bool(
             fsutil.list_subdirs(
-                spark, os.path.join(index_base, name), prefix=f"{bucket_col}="
+                spark,
+                os.path.join(index_base, name),
+                prefix=f"{layout.bucket_col}=",
             )
         )
         if fsutil.exists(spark, master_path):
             fresh = rebuild(spark.read.parquet(master_path))
             if bucketed:
                 fresh = fresh.withColumn(
-                    bucket_col,
-                    (stable_hash(F.col(key_col)) % n_buckets).cast("int"),
+                    layout.bucket_col, bucket_column(layout, n_buckets)
                 )
         else:
             # Master dir absent for this batch id: its rows were folded
@@ -460,19 +450,21 @@ def _purge_index_sidecars(
             fresh = spark.read.parquet(
                 os.path.join(index_base, name)
             ).filter(F.col("id").isNull() | ~F.col("id").isin(lits))
-        if fsutil.exists(spark, os.path.join(master_dir, freq_rel)):
+        if freq_name and fsutil.exists(
+            spark, os.path.join(master_dir, freq_name, name)
+        ):
             _journaled_replace(
                 spark,
                 master_dir,
-                freq_rel,
-                fresh.groupBy(key_col).agg(F.count(F.lit(1)).alias("cnt")),
+                os.path.join(freq_name, name),
+                fresh.groupBy(layout.key_col).agg(F.count(F.lit(1)).alias("cnt")),
             )
         _journaled_replace(
             spark,
             master_dir,
             index_rel,
             fresh,
-            partition_by=(bucket_col,) if bucketed else (),
+            partition_by=(layout.bucket_col,) if bucketed else (),
         )
     return hit
 
@@ -535,9 +527,7 @@ def _linkage_journal_path(master_dir: str) -> str:
 
 def _linkage_erasure(spark: SparkSession, master_dir: str):
     from backend_big_data_spark.operators.fuzzyjoin import gram_index
-    from backend_big_data_spark.streaming.linkage_ingest import (
-        _gram_bucket_count,
-    )
+    from backend_big_data_spark.streaming.maintenance import GRAM_INDEX
 
     return _master_erasure(
         spark,
@@ -547,12 +537,10 @@ def _linkage_erasure(spark: SparkSession, master_dir: str):
                 spark,
                 master_dir,
                 req["ids"],
-                index_name="grams",
-                freq_name="gramfreq",
-                key_col="gram",
-                rebuild=lambda df: gram_index(df, q=req["q"]),
-                bucket_col="__gb",
-                n_buckets=_gram_bucket_count(spark, master_dir),
+                "grams",
+                lambda df: gram_index(df, q=req["q"]),
+                GRAM_INDEX,
+                "gramfreq",
             )
         },
     )
@@ -600,9 +588,7 @@ def _setsim_journal_path(master_dir: str) -> str:
 
 def _setsim_erasure(spark: SparkSession, master_dir: str):
     from backend_big_data_spark.operators.setsimjoin import token_index
-    from backend_big_data_spark.streaming.setsim_ingest import (
-        _token_bucket_count,
-    )
+    from backend_big_data_spark.streaming.maintenance import TOKEN_INDEX
 
     return _master_erasure(
         spark,
@@ -612,12 +598,10 @@ def _setsim_erasure(spark: SparkSession, master_dir: str):
                 spark,
                 master_dir,
                 req["ids"],
-                index_name="tokens",
-                freq_name="tokfreq",
-                key_col="token",
-                rebuild=token_index,
-                bucket_col="__tb",
-                n_buckets=_token_bucket_count(spark, master_dir),
+                "tokens",
+                token_index,
+                TOKEN_INDEX,
+                "tokfreq",
             )
         },
     )
@@ -665,16 +649,13 @@ def _margin_erasure(spark: SparkSession, master_dir: str):
             "moment_dirs_rewritten": _purge_margin_moments(
                 spark, master_dir, req.get("moment_dirs", []), req["dim"]
             ),
-            # the margin master keeps no frequency sidecar: the purge's
-            # exists() gate skips "bucketfreq"
+            # the margin master keeps no frequency sidecar
             "bucket_dirs_rewritten": _purge_index_sidecars(
                 spark,
                 master_dir,
                 req["ids"],
-                index_name="buckets",
-                freq_name="bucketfreq",
-                key_col="bucket",
-                rebuild=lambda df: bucket_index(
+                "buckets",
+                lambda df: bucket_index(
                     df,
                     dim=req["dim"],
                     num_bits=req["num_bits"],

@@ -23,12 +23,9 @@ batch's touched clusters — the composition here is unchanged.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from backend_big_data_spark.similarity.semdedup import incremental_semdedup
-from backend_big_data_spark.sources import fsutil
 
 
 def read_embedding_corpus(
@@ -41,19 +38,9 @@ def read_embedding_corpus(
     at-least-once REPLAY of batch N must score against the corpus state it
     originally saw, not its own earlier output (every prior survivor would
     match itself at cosine 1.0 and the rewrite would admit ~nothing)."""
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
+    from backend_big_data_spark.streaming.maintenance import read_live
 
-    skip = fold_exclusions(spark, corpus_dir, "batch")
-    names = [
-        n
-        for n in fsutil.list_subdirs(spark, corpus_dir, prefix="batch=")
-        if n != f"batch={exclude_batch}" and n not in skip
-    ]
-    if not names:
-        return None
-    return spark.read.option("basePath", corpus_dir).parquet(
-        *[os.path.join(corpus_dir, n) for n in names]
-    )
+    return read_live(spark, corpus_dir, exclude=exclude_batch)
 
 
 def semdedup_batch_against_corpus(

@@ -35,7 +35,8 @@ rewrite identical links and identical admissions.
 Scale: per-batch cost = one tokenize over the BATCH, a broadcast prefix
 probe scanning the token index map-side (no index shuffle), and a
 candidate-bounded verify keyed on master id. The master fold-compacts
-like every family sidecar (`compact_setsim_master`), and erasure runs
+like every family sidecar (`compact_setsim_master`; the token index may
+fold token-bucketed — `maintenance.TOKEN_INDEX`), and erasure runs
 through `streaming/retraction.retract_from_setsim_master` (the token
 sidecar largely reconstructs the erased record's word set, so its purge
 is part of the erasure guarantee — same journal protocol as the
@@ -44,7 +45,6 @@ linkage master's gram index).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,36 +55,24 @@ from backend_big_data_spark.operators.setsimjoin import (
     token_jaccard_join_indexed,
 )
 from backend_big_data_spark.session import overlap
-from backend_big_data_spark.sources import fsutil
-from backend_big_data_spark.streaming.linkage_ingest import (
-    _covered_names,
-    _gram_bucket_py as _bucket_py,  # md5-60-bit % n — shared bucket hash
-    _read_dirs,
+from backend_big_data_spark.streaming.maintenance import (
+    TOKEN_INDEX,
+    fold,
+    fold_index,
+    read_covering,
+    read_index,
+    read_live,
 )
 
 DEFAULT_T_NUM = 3
 DEFAULT_T_DEN = 5
-
-#: Token-bucketed at-rest layout (round 12 — the BM25/linkage bucket fold
-#: applied to the setsim token index): folded token dirs live under
-#: ``tokens/batch=N/__tb=B`` with ``B = stable_hash(token) % n_buckets``,
-#: so a probe's at-rest index read prunes to ITS tokens' buckets at the
-#: directory level — listing cost tracks the probe, not the index.
-_TOKEN_BUCKET_META = "_token_buckets.json"
-
-
-def _token_bucket_count(spark: SparkSession, master_dir: str) -> int | None:
-    raw = fsutil.read_text(
-        spark, os.path.join(master_dir, "tokens", _TOKEN_BUCKET_META)
-    )
-    return json.loads(raw)["n_buckets"] if raw else None
 
 
 def read_setsim_master(
     spark: SparkSession, master_dir: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
     """Admitted master entities (id, s) so far, or None."""
-    return _read_dirs(spark, master_dir, exclude_batch)
+    return read_live(spark, master_dir, exclude=exclude_batch)
 
 
 def read_master_tokens(
@@ -93,44 +81,15 @@ def read_master_tokens(
     exclude_batch: int | None = None,
     probe_tokens: list[str] | None = None,
 ) -> DataFrame | None:
-    """The maintained (id, token) index over the admitted master.
-
-    Handles MIXED layouts after a token-bucketed fold
-    (`compact_setsim_master` with ``token_buckets``): folded dirs carry
-    the ``__tb`` partition column, the un-folded tail doesn't — per-dir
-    reads unioned by name. With ``probe_tokens`` given and a bucketed
-    layout present, the bucket filter prunes the folded bulk to the
-    probe's own tokens' buckets at the DIRECTORY level
-    (PartitionFilters); the flat tail passes the null arm. Pruning is
-    result-invariant for any candidate join keyed on the probe's
-    tokens — the linkage gram reader's argument verbatim."""
-    from backend_big_data_spark.streaming.maintenance import fold_exclusions
-
-    base = os.path.join(master_dir, "tokens")
-    skip = fold_exclusions(spark, base, "batch")
-    names = [
-        n
-        for n in fsutil.list_subdirs(spark, base, prefix="batch=")
-        if n != f"batch={exclude_batch}" and n not in skip
-    ]
-    if not names:
-        return None
-    frames = [
-        spark.read.option("basePath", base).parquet(os.path.join(base, n))
-        for n in names
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    if "batch" in out.columns:
-        out = out.drop("batch")
-    n_buckets = _token_bucket_count(spark, master_dir)
-    if n_buckets and probe_tokens is not None and "__tb" in out.columns:
-        buckets = sorted({_bucket_py(t, n_buckets) for t in probe_tokens})
-        out = out.filter(
-            F.col("__tb").isNull() | F.col("__tb").isin(buckets)
-        )
-    return out.drop("__tb") if "__tb" in out.columns else out
+    """The maintained (id, token) index over the admitted master:
+    `maintenance.read_index` over `maintenance.TOKEN_INDEX` (mixed
+    layouts after `compact_setsim_master` with ``token_buckets``;
+    ``probe_tokens`` prunes the bucketed bulk to the probe's own
+    tokens' buckets)."""
+    out = read_index(
+        spark, master_dir, TOKEN_INDEX, exclude_batch, probe_keys=probe_tokens
+    )
+    return None if out is None else out.drop("batch")
 
 
 def probe_master_tokens(
@@ -166,14 +125,11 @@ def read_master_token_freq(
     counts sum to the full index's frequencies exactly). None when the
     sidecar does not cover every token directory — callers then fall
     back to batch-local ranking (result-invariant either way)."""
-    tf_base = os.path.join(master_dir, "tokfreq")
-    names = _covered_names(spark, tf_base, exclude_batch)
-    if not names or names != _covered_names(
-        spark, os.path.join(master_dir, "tokens"), exclude_batch
-    ):
-        return None
-    return spark.read.option("basePath", tf_base).parquet(
-        *[os.path.join(tf_base, n) for n in sorted(names)]
+    return read_covering(
+        spark,
+        os.path.join(master_dir, "tokfreq"),
+        os.path.join(master_dir, "tokens"),
+        exclude_batch,
     )
 
 
@@ -376,77 +332,24 @@ def compact_setsim_master(
     no master dir). When everything is aligned the extra calls are
     metadata-cost no-ops.
 
-    ``token_buckets``: lay the folded token index out PARTITIONED BY
-    ``__tb = stable_hash(token) % token_buckets`` — probes then prune
-    the folded bulk to their own tokens' buckets at the directory level
-    (`read_master_tokens` with ``probe_tokens`` /
-    `probe_master_tokens`). Sticky width, mixed-layout reader,
-    layout-preserving erasure — the linkage gram fold's contract
-    verbatim."""
-    from backend_big_data_spark.streaming.maintenance import _fold
-    from backend_big_data_spark.text.sampling import stable_hash
-
-    if token_buckets is None:
-        token_buckets = _token_bucket_count(spark, master_dir)
-    tokens_dir = os.path.join(master_dir, "tokens")
-    tokfreq_dir = os.path.join(master_dir, "tokfreq")
-
+    ``token_buckets``: fold the token index bucketed
+    (`maintenance.fold_index` over `maintenance.TOKEN_INDEX`), so
+    `probe_master_tokens` prunes to its tokens' buckets."""
     # Disjoint directories, independent crash journals: the three folds
     # overlap (the linkage compactor's pattern).
-    def _fold_master() -> list[int]:
-        return _fold(spark, master_dir, "batch", keep_latest)
-
-    def _fold_tokens() -> None:
-        if not fsutil.list_subdirs(spark, tokens_dir, prefix="batch="):
-            return
-        if token_buckets:
-            _fold(
-                spark,
-                tokens_dir,
-                "batch",
-                keep_latest,
-                reducer=lambda df: (
-                    df.drop("__tb") if "__tb" in df.columns else df
-                )
-                .withColumn(
-                    "__tb",
-                    (stable_hash(F.col("token")) % token_buckets).cast(
-                        "int"
-                    ),
-                )
-                .sortWithinPartitions("__tb", "token"),
-                partition_by=("__tb",),
-            )
-            fsutil.write_text_atomic(
-                spark,
-                os.path.join(tokens_dir, _TOKEN_BUCKET_META),
-                json.dumps({"n_buckets": int(token_buckets)}),
-            )
-        else:
-            _fold(
-                spark,
-                tokens_dir,
-                "batch",
-                keep_latest,
-                reducer=lambda df: (
-                    df.drop("__tb") if "__tb" in df.columns else df
-                ),
-            )
-
-    def _fold_tokfreq() -> None:
-        if not fsutil.list_subdirs(spark, tokfreq_dir, prefix="batch="):
-            return
-        _fold(
+    return overlap(
+        lambda: fold(spark, master_dir, "batch", keep_latest),
+        lambda: fold_index(
+            spark, master_dir, TOKEN_INDEX, keep_latest, token_buckets
+        ),
+        lambda: fold(
             spark,
-            tokfreq_dir,
+            os.path.join(master_dir, "tokfreq"),
             "batch",
             keep_latest,
-            reducer=lambda df: df.groupBy("token").agg(
-                F.sum("cnt").alias("cnt")
-            ),
-        )
-
-    return overlap(_fold_master, _fold_tokens, _fold_tokfreq)[0]
+            reducer=lambda df: df.groupBy("token").agg(F.sum("cnt").alias("cnt")),
+        ),
+    )[0]
 
 
 __all__ = [

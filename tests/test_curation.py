@@ -1199,6 +1199,12 @@ def test_fold_crash_recovery_all_interrupt_points(spark, tmp_path):
     (C) published, journal present, stale source dirs remain -> readers
         exclude the superseded dirs (no double-count); compactor
         finishes the deletes.
+
+    Two inputs: the drift monitor's ``delta=N`` counts (fold 0+1, keep
+    2), and the linkage gram index read after a bucketed fold with a
+    flat tail (fold the bucketed ``batch=0`` and the flat ``batch=3``
+    into a bucketed ``batch=0``, keep the flat ``batch=4``), read pruned
+    to a probe's grams.
     """
     import json
     import os
@@ -1208,9 +1214,19 @@ def test_fold_crash_recovery_all_interrupt_points(spark, tmp_path):
         drift_monitor_sink,
         read_corpus_counts,
     )
-    from backend_big_data_spark.streaming.maintenance import recover_fold
+    from backend_big_data_spark.streaming.linkage_ingest import (
+        compact_linkage_master,
+        read_master_grams,
+        seed_master_batch,
+    )
+    from backend_big_data_spark.streaming.maintenance import (
+        GRAM_INDEX,
+        bucket_column,
+        read_dirs,
+        recover_fold,
+    )
 
-    def mk(d):
+    def mk_counts(d):
         counts, metrics = str(d / "counts"), str(d / "metrics")
         sink = drift_monitor_sink(counts, metrics)
         sink(_docs(spark, [(1, "alpha beta gamma alpha")]), 0)
@@ -1218,62 +1234,90 @@ def test_fold_crash_recovery_all_interrupt_points(spark, tmp_path):
         sink(_docs(spark, [(3, "gamma epsilon")]), 2)
         return counts
 
-    def counts_of(cdir):
+    def read_counts(cdir):
         return sorted(map(tuple, read_corpus_counts(spark, cdir).collect()))
 
-    def fold_payload(cdir):
-        return (
-            spark.read.parquet(
-                os.path.join(cdir, "delta=0"), os.path.join(cdir, "delta=1")
-            )
-            .groupBy("tok")
-            .agg(F.sum("n").alias("n"))
-        )
+    def counts_payload(cdir, tmp):
+        spark.read.parquet(
+            os.path.join(cdir, "delta=0"), os.path.join(cdir, "delta=1")
+        ).groupBy("tok").agg(F.sum("n").alias("n")).write.parquet(tmp)
 
-    meta = {"prefix": "delta", "publish": 0, "tmp": "_compacting_delta_0",
-            "delete": [0, 1]}
+    def entities(rows):
+        return spark.createDataFrame(rows, "id long, s string")
 
-    # -- (A) crash mid-temp-write, journal never committed ------------------
-    ca = mk(tmp_path / "a")
-    before = counts_of(ca)
-    os.makedirs(os.path.join(ca, "_compacting_delta_0"))
-    with open(os.path.join(ca, "_compacting_delta_0", "part-junk"), "w") as f:
-        f.write("not parquet")
-    assert counts_of(ca) == before  # readers never look at temp dirs
-    assert os.path.exists(os.path.join(ca, "_compacting_delta_0"))  # no mutation
-    assert recover_fold(spark, ca, "delta") == "back"
-    assert not os.path.exists(os.path.join(ca, "_compacting_delta_0"))
-    assert sorted(os.listdir(ca)) == ["delta=0", "delta=1", "delta=2"]
+    def mk_grams(d):
+        mdir = str(d / "master")
+        seed_master_batch(spark, mdir, entities([(1, "alpha beta"), (2, "gamma delta")]), 0)
+        seed_master_batch(spark, mdir, entities([(3, "epsilon zeta")]), 1)
+        compact_linkage_master(spark, mdir, keep_latest=0, gram_buckets=4)
+        seed_master_batch(spark, mdir, entities([(4, "gamma fabrication")]), 3)
+        seed_master_batch(spark, mdir, entities([(5, "theta gamma")]), 4)
+        return os.path.join(mdir, "grams")
 
-    # -- (B) crash after journal commit, before publish ---------------------
-    cb = mk(tmp_path / "b")
-    assert counts_of(cb) == before
-    fold_payload(cb).write.parquet(os.path.join(cb, "_compacting_delta_0"))
-    with open(os.path.join(cb, "_fold_journal_delta.json"), "w") as f:
-        json.dump(meta, f)
-    assert counts_of(cb) == before  # sources authoritative, nothing excluded
-    assert os.path.exists(os.path.join(cb, "_fold_journal_delta.json"))  # no mutation
-    assert recover_fold(spark, cb, "delta") == "forward"
-    assert counts_of(cb) == before
-    assert sorted(n for n in os.listdir(cb) if n.startswith("delta=")) == [
-        "delta=0", "delta=2"]
-    assert not os.path.exists(os.path.join(cb, "_fold_journal_delta.json"))
+    def read_grams(gdir):
+        probe = ["gam", "amm", "fab", "eps", "the", "zzz"]
+        grams = read_master_grams(spark, os.path.dirname(gdir), probe_grams=probe)
+        return sorted(map(tuple, grams.collect()))
 
-    # -- (C) crash after publish, before source deletes ---------------------
-    cc = mk(tmp_path / "c")
-    fold_payload(cc).write.parquet(os.path.join(cc, "_compacting_delta_0"))
-    with open(os.path.join(cc, "_fold_journal_delta.json"), "w") as f:
-        json.dump(meta, f)
-    shutil.rmtree(os.path.join(cc, "delta=0"))
-    os.rename(os.path.join(cc, "_compacting_delta_0"), os.path.join(cc, "delta=0"))
-    # delta=1 is now BOTH inside the published fold and on disk — readers
-    # must mask it or every read double-counts batch 1.
-    assert counts_of(cc) == before  # exclusion mask, no mutation
-    assert os.path.exists(os.path.join(cc, "delta=1"))
-    assert recover_fold(spark, cc, "delta") == "forward"
-    assert counts_of(cc) == before
-    assert sorted(n for n in os.listdir(cc) if n.startswith("delta=")) == [
-        "delta=0", "delta=2"]
+    def grams_payload(gdir, tmp):
+        read_dirs(spark, gdir, ["batch=0", "batch=3"]).drop("batch").withColumn(
+            "__gb", bucket_column(GRAM_INDEX, 4)
+        ).write.partitionBy("__gb").parquet(tmp)
+
+    for prefix, mk, read, payload, (first, second, kept) in [
+        ("delta", mk_counts, read_counts, counts_payload, (0, 1, 2)),
+        ("batch", mk_grams, read_grams, grams_payload, (0, 3, 4)),
+    ]:
+        def dirs(c):
+            return sorted(n for n in os.listdir(c) if n.startswith(prefix + "="))
+
+        tmp = f"_compacting_{prefix}_{first}"
+        journal = f"_fold_journal_{prefix}.json"
+        meta = {"prefix": prefix, "publish": first, "tmp": tmp,
+                "delete": [first, second]}
+        on_disk = [f"{prefix}={i}" for i in (first, second, kept)]
+        folded = [f"{prefix}={i}" for i in (first, kept)]
+
+        # -- (A) crash mid-temp-write, journal never committed --------------
+        ca = mk(tmp_path / prefix / "a")
+        before = read(ca)
+        assert before
+        os.makedirs(os.path.join(ca, tmp))
+        with open(os.path.join(ca, tmp, "part-junk"), "w") as f:
+            f.write("not parquet")
+        assert read(ca) == before  # readers never look at temp dirs
+        assert os.path.exists(os.path.join(ca, tmp))  # no mutation
+        assert recover_fold(spark, ca, prefix) == "back"
+        assert not os.path.exists(os.path.join(ca, tmp))
+        assert dirs(ca) == on_disk
+
+        # -- (B) crash after journal commit, before publish -----------------
+        cb = mk(tmp_path / prefix / "b")
+        assert read(cb) == before
+        payload(cb, os.path.join(cb, tmp))
+        with open(os.path.join(cb, journal), "w") as f:
+            json.dump(meta, f)
+        assert read(cb) == before  # sources authoritative, nothing excluded
+        assert os.path.exists(os.path.join(cb, journal))  # no mutation
+        assert recover_fold(spark, cb, prefix) == "forward"
+        assert read(cb) == before
+        assert dirs(cb) == folded
+        assert not os.path.exists(os.path.join(cb, journal))
+
+        # -- (C) crash after publish, before source deletes -----------------
+        cc = mk(tmp_path / prefix / "c")
+        payload(cc, os.path.join(cc, tmp))
+        with open(os.path.join(cc, journal), "w") as f:
+            json.dump(meta, f)
+        shutil.rmtree(os.path.join(cc, f"{prefix}={first}"))
+        os.rename(os.path.join(cc, tmp), os.path.join(cc, f"{prefix}={first}"))
+        # the second source is now BOTH inside the published fold and on
+        # disk — readers must mask it or every read double-counts it.
+        assert read(cc) == before  # exclusion mask, no mutation
+        assert os.path.exists(os.path.join(cc, f"{prefix}={second}"))
+        assert recover_fold(spark, cc, prefix) == "forward"
+        assert read(cc) == before
+        assert dirs(cc) == folded
 
 
 @pytest.mark.slow

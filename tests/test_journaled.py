@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from backend_big_data_spark.sources import fsutil
-from backend_big_data_spark.streaming.maintenance import _fold
+from backend_big_data_spark.streaming.maintenance import fold
 from backend_big_data_spark.streaming.retraction import (
     dirs_holding,
     journaled,
@@ -85,7 +85,7 @@ def test_dirs_holding_reads_folded_and_bucketed_layouts(spark, tmp_path):
     base = str(tmp_path / "ix")
     for b, ids in enumerate([[1, 2], [3], [4, 5]]):
         _rows(spark, ids).write.parquet(f"{base}/batch={b}")
-    assert _fold(
+    assert fold(
         spark,
         base,
         "batch",

@@ -164,7 +164,7 @@ class TestCompaction:
             ) == {"batch=0", "batch=2"}, side
 
     def test_misaligned_crash_reads_stay_exact_and_heal(self, spark, tmp_path):
-        from backend_big_data_spark.streaming.maintenance import _fold
+        from backend_big_data_spark.streaming.maintenance import fold
 
         cdir = str(tmp_path / "c")
         sink = lm_ingest_sink(cdir)
@@ -173,7 +173,7 @@ class TestCompaction:
         sink(_df(spark, [(9, "tail batch words here")]), 2)
         before = (_counts2(spark, cdir), _counts3(spark, cdir))
         # crash window: docs fold, sidecar folds never run
-        assert _fold(spark, cdir, "batch", 1) == [0, 1]
+        assert fold(spark, cdir, "batch", 1) == [0, 1]
         # count sums are associative — reads stay exact in the window
         assert (_counts2(spark, cdir), _counts3(spark, cdir)) == before
         # the next compaction heals the layout even though the docs
@@ -240,14 +240,14 @@ class TestErasure:
         erasure arrives: the orphaned count dirs must be purged after
         the covering folded docs dir is recounted — erased mass gone,
         every other document's mass preserved."""
-        from backend_big_data_spark.streaming.maintenance import _fold
+        from backend_big_data_spark.streaming.maintenance import fold
 
         cdir = str(tmp_path / "c")
         sink = lm_ingest_sink(cdir)
         sink(_df(spark, B1), 0)
         sink(_df(spark, B2), 1)
         sink(_df(spark, [(9, "tail batch words here")]), 2)
-        assert _fold(spark, cdir, "batch", 1) == [0, 1]
+        assert fold(spark, cdir, "batch", 1) == [0, 1]
         retract_from_lm_corpus(spark, cdir, [4])  # originally batch 1
         survivors = [r for r in B1 + B2 + [(9, "tail batch words here")] if r[0] != 4]
         assert _counts2(spark, cdir) == _direct2(spark, survivors)

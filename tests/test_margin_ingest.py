@@ -245,7 +245,7 @@ class TestErasure:
         delete it."""
         import shutil
 
-        from backend_big_data_spark.streaming.maintenance import _fold
+        from backend_big_data_spark.streaming.maintenance import fold
         from backend_big_data_spark.streaming.retraction import (
             retract_from_margin_master,
         )
@@ -258,7 +258,7 @@ class TestErasure:
         # fold ONLY the master (simulated sidecar-fold crash): batches
         # {0,1} fold into batch=0, so buckets/batch=1 is now an orphan
         # holding ids 20 and 22
-        assert _fold(spark, mdir, "batch", 1) == [0, 1]
+        assert fold(spark, mdir, "batch", 1) == [0, 1]
         assert not fsutil.exists(spark, f"{mdir}/batch=1")
         assert fsutil.exists(spark, f"{mdir}/buckets/batch=1")
         out = retract_from_margin_master(
@@ -378,7 +378,7 @@ class TestMomentSidecars:
             covariance_from_moments,
             embedding_covariance,
         )
-        from backend_big_data_spark.streaming.maintenance import _fold
+        from backend_big_data_spark.streaming.maintenance import fold
         from backend_big_data_spark.streaming.margin_ingest import (
             read_master_moments,
         )
@@ -391,7 +391,7 @@ class TestMomentSidecars:
         sink(_df(spark, B1), 0)
         sink(_df(spark, [(20, _unit(3)), (22, _unit(5))]), 1)
         sink(_df(spark, [(21, _unit(4))]), 2)
-        _fold(spark, mdir, "batch", 1)  # master only: moments lag
+        fold(spark, mdir, "batch", 1)  # master only: moments lag
         out = retract_from_margin_master(
             spark, mdir, [20], dim=DIM, num_bits=4, num_tables=4
         )

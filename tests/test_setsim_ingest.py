@@ -349,7 +349,7 @@ class TestCompactionCrashMisalignment:
     C2 = [(21, "epsilon motors north")]
 
     def _build_misaligned(self, spark, tmp_path):
-        from backend_big_data_spark.streaming.maintenance import _fold
+        from backend_big_data_spark.streaming.maintenance import fold
 
         mdir = str(tmp_path / "m")
         sink = setsim_ingest_sink(mdir)
@@ -357,7 +357,7 @@ class TestCompactionCrashMisalignment:
         sink(_df(spark, self.C1), 1)
         sink(_df(spark, self.C2), 2)
         # simulate the crash: master folds {0,1}->0, sidecars untouched
-        assert _fold(spark, mdir, "batch", 1) == [0, 1]
+        assert fold(spark, mdir, "batch", 1) == [0, 1]
         master_dirs = set(fsutil.list_subdirs(spark, mdir, prefix="batch="))
         token_dirs = set(
             fsutil.list_subdirs(spark, f"{mdir}/tokens", prefix="batch=")
