@@ -18,6 +18,8 @@ scale, never data scale).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import SparkSession
 
 
@@ -46,6 +48,20 @@ def list_subdirs(spark: SparkSession, dir_path: str, prefix: str = "") -> list[s
         for st in fs.listStatus(hpath)
         if st.isDirectory() and st.getPath().getName().startswith(prefix)
     )
+
+
+def glob_under(
+    spark: SparkSession, dir_path: str, names: list[str], pattern: str
+) -> list[tuple[str, str]]:
+    """(child name, entry name) of every entry matching ``pattern`` (a
+    Hadoop glob) inside the children ``names`` of ``dir_path`` — one
+    glob call, however many children. ``dir_path`` is matched literally."""
+    escaped = re.sub(r"([\\{}\[\]*?])", r"\\\1", dir_path)
+    fs, hpath, _ = _fs(spark, f"{escaped}/{{{','.join(names)}}}/{pattern}")
+    return [
+        (st.getPath().getParent().getName(), st.getPath().getName())
+        for st in fs.globStatus(hpath) or []
+    ]
 
 
 def read_text(spark: SparkSession, path_str: str) -> str | None:
@@ -102,6 +118,7 @@ def delete(spark: SparkSession, path_str: str, recursive: bool = True) -> bool:
 __all__ = [
     "delete",
     "exists",
+    "glob_under",
     "list_subdirs",
     "read_text",
     "rename_checked",

@@ -63,8 +63,11 @@ above, minus the replaying batch's own dir — through :func:`read_dirs`,
 one ``basePath`` read per directory layout (flat, bucketed fold,
 cluster-partitioned) unioned by name, so the ``{prefix}`` partition
 column surfaces and a mixed layout never reaches a single multi-path
-read. :func:`read_live` is the two together; :func:`read_covering` adds
-the "summary sidecar covers its directory" check.
+read (a reader that passes its schema vouches for one layout and skips
+the probe). :func:`read_live` is the two together; :func:`read_covering`
+adds the "summary sidecar covers its directory" check. :func:`fold`
+reads its sources with their merged schema: it rewrites them for good,
+so a column only newer dirs carry must survive.
 
 Bucketed indexes: an (id, key) index may be folded PARTITIONED BY a
 bucket column ``stable_hash(key) % width`` (md5, 60 bits), so a probe's
@@ -96,7 +99,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import re
 from dataclasses import dataclass
 from functools import reduce
 
@@ -300,16 +302,6 @@ def live_dirs(
     ]
 
 
-def _glob(spark: SparkSession, pattern: str) -> list[tuple[str, str]]:
-    """(parent dir name, name) of every path matching a Hadoop glob."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(pattern)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return [
-        (st.getPath().getParent().getName(), st.getPath().getName())
-        for st in fs.globStatus(path) or []
-    ]
-
-
 def _layout_groups(
     spark: SparkSession, base: str, names: list[str]
 ) -> list[list[str]]:
@@ -321,18 +313,13 @@ def _layout_groups(
     one glob, plus one more when flat and partitioned dirs mix."""
     if len(names) < 2:
         return [list(names)]
-
-    def under(group: list[str]) -> str:
-        escaped = re.sub(r"([\\{}\[\]*?])", r"\\\1", base)
-        return f"{escaped}/{{{','.join(group)}}}"
-
     cols: dict[str, set[str]] = {}
-    for parent, name in _glob(spark, under(names) + "/*=*"):
+    for parent, name in fsutil.glob_under(spark, base, names, "*=*"):
         cols.setdefault(parent, set()).add(name.split("=", 1)[0])
     if not cols:
         return [list(names)]
     flat = [n for n in names if n not in cols]
-    with_data = {p for p, _ in _glob(spark, under(flat) + "/[!_.]*")} if flat else set()
+    with_data = {p for p, _ in fsutil.glob_under(spark, base, flat, "[!_.]*")} if flat else set()
     groups: dict[frozenset[str], list[str]] = {}
     for n in names:
         if n in cols or n in with_data:
@@ -341,25 +328,33 @@ def _layout_groups(
 
 
 def read_dirs(
-    spark: SparkSession, base: str, names: list[str], schema: str | None = None
+    spark: SparkSession,
+    base: str,
+    names: list[str],
+    schema: str | None = None,
+    merge_schema: bool = False,
 ) -> DataFrame | None:
     """The named dirs under ``base`` as one frame, or None for no names:
     one ``basePath`` read per directory layout, unioned by name (a
     layout's missing partition column reads as null). The ``{prefix}``
     partition column surfaces. ``schema`` (DDL including the partition
-    columns) skips inference."""
+    columns) skips inference and fixes one layout: the dirs are read in
+    one read, with no layout probe. ``merge_schema`` infers the union of
+    every data file's columns instead of one footer's."""
     if not names:
         return None
 
     def read(group: list[str]) -> DataFrame:
         reader = spark.read if schema is None else spark.read.schema(schema)
+        if merge_schema:
+            reader = reader.option("mergeSchema", "true")
         return reader.option("basePath", base).parquet(
             *[os.path.join(base, n) for n in group]
         )
 
+    groups = [names] if schema else _layout_groups(spark, base, names)
     return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True),
-        map(read, _layout_groups(spark, base, names)),
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), map(read, groups)
     )
 
 
@@ -410,10 +405,13 @@ def fold(
     folding = ids[: len(ids) - keep_latest] if keep_latest else ids
     if len(folding) < 2:
         return []
-    # the {prefix}=N partition column must not be baked into the
-    # rewritten data files, where it would collide with the readers'
-    # partition-discovered column
-    df = read_dirs(spark, base, [f"{prefix}={i}" for i in folding]).drop(prefix)
+    # Merged schema: the fold rewrites its sources for good, so a column
+    # only some of them carry (the ingest corpus's later ``fp``) must
+    # survive. The {prefix}=N partition column must not be baked into
+    # the rewritten data files, where it would collide with the readers'
+    # partition-discovered column.
+    names = [f"{prefix}={i}" for i in folding]
+    df = read_dirs(spark, base, names, merge_schema=True).drop(prefix)
     if reducer is not None:
         df = reducer(df)
     tmp_name = f"_compacting_{prefix}_{folding[0]}"

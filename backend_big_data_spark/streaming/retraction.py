@@ -386,9 +386,8 @@ def _purge_index_sidecars(
     spark: SparkSession,
     master_dir: str,
     ids: list,
-    index_name: str,
     rebuild,
-    layout=None,
+    index,
     freq_name: str | None = None,
 ) -> list[str]:
     """Rewrite every inverted-index/frequency sidecar directory still
@@ -401,12 +400,12 @@ def _purge_index_sidecars(
     are not yet purged, so the marker must be destroyed last.
 
     ``rebuild(master_df) -> (id, key) index frame``. The linkage and
-    setsim masters pass their ``layout`` (`maintenance.GRAM_INDEX` /
-    `maintenance.TOKEN_INDEX`) and frequency sidecar (``gramfreq`` /
+    setsim masters pass their ``index`` layout (`maintenance.GRAM_INDEX`
+    / `maintenance.TOKEN_INDEX`) and frequency sidecar (``gramfreq`` /
     ``tokfreq``, the per-key count of the index); the margin master's
-    ``buckets`` index has neither.
+    never-bucketed index passes only its directory name, ``"buckets"``.
 
-    With a ``layout`` of recorded width, the rewrite of a dir carrying
+    With a layout of recorded width, the rewrite of a dir carrying
     the bucket partition column recomputes the bucket
     (`maintenance.bucket_column`) and publishes PARTITIONED BY it —
     erasure preserves each directory's own layout (the probe,
@@ -416,6 +415,8 @@ def _purge_index_sidecars(
         index_width,
     )
 
+    layout = None if isinstance(index, str) else index
+    index_name = index if layout is None else layout.subdir
     index_base = os.path.join(master_dir, index_name)
     n_buckets = index_width(spark, master_dir, layout) if layout else None
     lits = [F.lit(i) for i in ids]
@@ -537,7 +538,6 @@ def _linkage_erasure(spark: SparkSession, master_dir: str):
                 spark,
                 master_dir,
                 req["ids"],
-                "grams",
                 lambda df: gram_index(df, q=req["q"]),
                 GRAM_INDEX,
                 "gramfreq",
@@ -598,7 +598,6 @@ def _setsim_erasure(spark: SparkSession, master_dir: str):
                 spark,
                 master_dir,
                 req["ids"],
-                "tokens",
                 token_index,
                 TOKEN_INDEX,
                 "tokfreq",
@@ -654,13 +653,13 @@ def _margin_erasure(spark: SparkSession, master_dir: str):
                 spark,
                 master_dir,
                 req["ids"],
-                "buckets",
                 lambda df: bucket_index(
                     df,
                     dim=req["dim"],
                     num_bits=req["num_bits"],
                     num_tables=req["num_tables"],
                 ),
+                "buckets",
             ),
         },
     )

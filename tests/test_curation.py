@@ -1264,9 +1264,17 @@ def test_fold_crash_recovery_all_interrupt_points(spark, tmp_path):
             "__gb", bucket_column(GRAM_INDEX, 4)
         ).write.partitionBy("__gb").parquet(tmp)
 
-    for prefix, mk, read, payload, (first, second, kept) in [
-        ("delta", mk_counts, read_counts, counts_payload, (0, 1, 2)),
-        ("batch", mk_grams, read_grams, grams_payload, (0, 3, 4)),
+    # the width and fold-history files, each with the local filesystem's
+    # checksum file
+    gram_sidecars = [
+        "._fold_history_batch.json.crc",
+        "._gram_buckets.json.crc",
+        "_fold_history_batch.json",
+        "_gram_buckets.json",
+    ]
+    for prefix, mk, read, payload, (first, second, kept), sidecars in [
+        ("delta", mk_counts, read_counts, counts_payload, (0, 1, 2), []),
+        ("batch", mk_grams, read_grams, grams_payload, (0, 3, 4), gram_sidecars),
     ]:
         def dirs(c):
             return sorted(n for n in os.listdir(c) if n.startswith(prefix + "="))
@@ -1289,7 +1297,7 @@ def test_fold_crash_recovery_all_interrupt_points(spark, tmp_path):
         assert os.path.exists(os.path.join(ca, tmp))  # no mutation
         assert recover_fold(spark, ca, prefix) == "back"
         assert not os.path.exists(os.path.join(ca, tmp))
-        assert dirs(ca) == on_disk
+        assert sorted(os.listdir(ca)) == sidecars + on_disk
 
         # -- (B) crash after journal commit, before publish -----------------
         cb = mk(tmp_path / prefix / "b")

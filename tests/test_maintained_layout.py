@@ -122,3 +122,26 @@ def test_read_dirs_skips_an_empty_partitioned_dir(spark, tmp_path):
     names = ["batch=0", "batch=1"]
     assert sorted(r["vec_id"] for r in read_dirs(spark, base, names).collect()) == [1, 2, 3]
     assert dirs_holding(spark, base, [2, 3], "vec_id") == {"batch=0": 2}
+
+
+def test_fold_keeps_a_column_only_newer_dirs_carry(spark, tmp_path):
+    """A fold rewrites its sources for good, so it reads them with their
+    merged schema: an ingest corpus started before the ``fp`` column
+    existed keeps the newer batches' fingerprints through a fold whose
+    oldest dir has no ``fp``."""
+    from backend_big_data_spark.streaming.maintenance import compact_ingest_corpus
+
+    base = str(tmp_path / "corpus")
+    spark.createDataFrame([(1, "old text")], "id long, text string").write.parquet(
+        f"{base}/batch=0"
+    )
+    for i in (1, 2):
+        spark.createDataFrame(
+            [(10 + i, f"text {i}", f"fp{i}")], "id long, text string, fp string"
+        ).write.parquet(f"{base}/batch={i}")
+    assert compact_ingest_corpus(spark, base, keep_latest=1) == [0, 1]
+    folded = spark.read.parquet(f"{base}/batch=0")
+    assert sorted(map(tuple, folded.select("id", "fp").collect())) == [
+        (1, None),
+        (11, "fp1"),
+    ]
