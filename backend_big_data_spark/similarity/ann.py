@@ -1,15 +1,25 @@
-"""Similarity search over embedding columns (north-star additive scope).
+"""Similarity search over embedding columns (north-star additive scope),
+and the one home of the rules every ANN path shares.
 
-Two paths:
+Entry points here: brute force (the exact baseline), SQ8, IVF with flat
+or SQ8 lists, and sign-LSH (base and multi-probe). `pq.py` adds PQ and
+IVF-PQ, `ivf_serve.py` IVF over stored list ids, `mining.py` margin pair
+mining, `negatives.py` label-restricted neighbors. Each of them builds
+its plan from the helpers below, so the oracle contract is written once:
 
-- **brute force** (the correctness baseline): broadcast the query set,
-  cosine via higher-order array functions (JVM-side, no Python), top-k per
-  query via window. Exact. Cost O(|queries|·|corpus|) — fine when the query
-  set is small/broadcastable, which is the serving-path shape.
-- **random-hyperplane LSH** (the 100 TB scale path): sign-bit bucket keys
-  from seeded hyperplanes; candidates only meet within a bucket
-  (multi-probe across ``num_tables`` independent tables), then exact cosine
-  re-rank on candidates. Recall tunable via bits/tables.
+- :func:`rank_neighbors` / :func:`neighbor_topk` — the neighbor-ranking
+  tail: top-k per query by (sim desc, neighbor_id), cosine rounded to
+  6 dp, output ``(query_id, neighbor_id, cosine_sim, rnk)``;
+- :func:`broadcast_scores` — exact scoring against a broadcast query set
+  (the corpus streams map-side, no corpus shuffle);
+- :func:`nearest_lists` — the coarse-list probe: each vector's ``n``
+  nearest centroids by (cosine desc, list_id); :func:`probed_scores`
+  scores the (query, neighbor) pairs that share a probed list;
+- :func:`exact_rerank` — shortlist on approximate scores, then re-score
+  the shortlist against full-precision vectors;
+- :func:`sign_planes` / :func:`sign_buckets` — the sign-LSH kernel: the
+  plane family and the ``"t:bits"`` bucket keys (stored on disk by the
+  margin master's ``buckets/`` sidecar, so their format is fixed).
 """
 
 from __future__ import annotations
@@ -40,6 +50,147 @@ def cosine_sim(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def rank_neighbors(scored: DataFrame, k: int) -> DataFrame:
+    """The neighbor-ranking tail without the final sort: ``scored``
+    (query_id, neighbor_id, sim) → the top ``k`` per query by (sim desc,
+    neighbor_id) as (query_id, neighbor_id, cosine_sim[6dp], rnk)."""
+    top = topk_per_group(
+        scored,
+        partition_by=["query_id"],
+        order_by=[F.desc("sim"), F.col("neighbor_id")],
+        k=k,
+        rank_col="rnk",
+    )
+    return top.select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("sim"), 6).alias("cosine_sim"),
+        "rnk",
+    )
+
+
+def neighbor_topk(scored: DataFrame, k: int) -> DataFrame:
+    """:func:`rank_neighbors` ordered by (query_id, rnk) — the output of
+    every top-k ANN entry point."""
+    return rank_neighbors(scored, k).orderBy("query_id", "rnk")
+
+
+def broadcast_scores(
+    neighbors: DataFrame, queries: DataFrame, where: Column | None = None
+) -> DataFrame:
+    """(query_id, neighbor_id, sim) for every pair of ``neighbors``
+    (neighbor_id, nv, ...) and the broadcast ``queries`` (query_id, qv,
+    ...), self pairs and pairs failing ``where`` dropped. The query side
+    must be small; the neighbor side streams map-side."""
+    keep = F.col("neighbor_id") != F.col("query_id")
+    if where is not None:
+        keep = where & keep
+    return (
+        neighbors.crossJoin(F.broadcast(queries))
+        .filter(keep)
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine_sim(F.col("qv"), F.col("nv")).alias("sim"),
+        )
+    )
+
+
+def _as_queries(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("qv"),
+    )
+
+
+def nearest_lists(
+    df: DataFrame,
+    centroids: DataFrame,
+    n: int,
+    prefix: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The coarse-list probe: each vector's ``n`` nearest centroids by
+    (cosine desc, list_id), as ``({prefix}_id, {prefix}_vec, list_id)``.
+    ``centroids`` — ``(list_id int, centroid array<double>)`` — is tiny
+    and broadcast; ``n == 1`` is the inverted-list assignment."""
+    pid, pvec = f"{prefix}_id", f"{prefix}_vec"
+    scored = (
+        df.select(
+            F.col(id_col).alias(pid),
+            F.col(vec_col).cast("array<double>").alias(pvec),
+        )
+        .crossJoin(F.broadcast(centroids))
+        .select(
+            pid,
+            pvec,
+            "list_id",
+            cosine_sim(F.col(pvec), F.col("centroid")).alias("csim"),
+        )
+    )
+    return topk_per_group(
+        scored,
+        partition_by=[pid],
+        order_by=[F.desc("csim"), F.col("list_id")],
+        k=n,
+        rank_col="_crnk",
+    ).select(pid, pvec, "list_id")
+
+
+def probed_scores(lists: DataFrame, probes: DataFrame, vec: str) -> DataFrame:
+    """(query_id, neighbor_id, sim) for every neighbor in one of the
+    query's probed lists: ``lists`` (neighbor_id, ``vec``, list_id) joins
+    the broadcast ``probes`` (query_id, query_vec, list_id) from
+    :func:`nearest_lists`.
+
+    No pair dedup: each neighbor lives in EXACTLY one inverted list (a
+    top-1 assignment), so a (query, neighbor) pair materializes at most
+    once — a distinct here would shuffle the whole candidate stream on
+    (query_id, neighbor_id) for nothing (guide §2.4: a distinct on
+    already-unique data). The overlapping-bucket LSH paths keep theirs."""
+    return (
+        lists.join(F.broadcast(probes), "list_id")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine_sim(F.col("query_vec"), F.col(vec)).alias("sim"),
+        )
+    )
+
+
+def exact_rerank(
+    approx: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rerank: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Full-precision re-rank: the top ``rerank`` of ``approx``
+    (query_id, neighbor_id, sim) per query are re-scored against the
+    full-precision vectors and ranked by :func:`neighbor_topk`. The tiny
+    shortlist broadcasts against the full-precision table, so the corpus
+    side streams map-side and never reshuffles."""
+    shortlist = rank_neighbors(approx, rerank).select("query_id", "neighbor_id")
+    full = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("nv"),
+    )
+    exact = (
+        full.join(F.broadcast(shortlist), "neighbor_id")
+        .join(F.broadcast(_as_queries(queries, id_col, vec_col)), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine_sim(F.col("qv"), F.col("nv")).alias("sim"),
+        )
+    )
+    return neighbor_topk(exact, k)
+
+
 def brute_force_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -53,38 +204,13 @@ def brute_force_cosine_topk(
     no shuffle of corpus vectors. Output: (query_id, neighbor_id,
     cosine_sim, rnk) with deterministic id tie-break.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("nv"),
     )
-    sim = cosine_sim(F.col("qv"), F.col("nv"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim"))
+    return neighbor_topk(
+        broadcast_scores(c, _as_queries(queries, id_col, vec_col)), k
     )
-    top = topk_per_group(
-        scored,
-        partition_by=["query_id"],
-        order_by=[F.desc("sim"), F.col("neighbor_id")],
-        k=k,
-        rank_col="rnk",
-    )
-    return top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("sim"), 6).alias("cosine_sim"),
-        "rnk",
-    ).orderBy("query_id", "rnk")
-
-
-def _hyperplanes(dim: int, num_bits: int, num_tables: int, seed: int):
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((num_tables, num_bits, dim))
 
 
 @lru_cache(maxsize=8)
@@ -124,6 +250,113 @@ def _md5_planes(dim: int, num_bits: int, num_tables: int):
     return planes
 
 
+def sign_planes(
+    plane_source: str, dim: int, num_bits: int, num_tables: int, seed: int = 42
+) -> np.ndarray:
+    """The (num_tables, num_bits, dim) hyperplanes of a sign-LSH index:
+    ``"gaussian"`` — seeded standard normal — or ``"md5"`` — hash-derived,
+    SQL-replayable (:func:`_md5_planes`; ``seed`` is unused). Any other
+    ``plane_source`` raises ``ValueError``: no oracle replays an unknown
+    family."""
+    if plane_source == "md5":
+        return _md5_planes(dim, num_bits, num_tables)
+    if plane_source == "gaussian":
+        rng = np.random.default_rng(seed)
+        return rng.standard_normal((num_tables, num_bits, dim))
+    raise ValueError(
+        f"plane_source must be 'gaussian' or 'md5', got {plane_source!r}"
+    )
+
+
+def sign_buckets(
+    df: DataFrame,
+    planes: np.ndarray,
+    prefix: str,
+    n_extra: int = 0,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """One row per sign-LSH bucket key of each vector:
+    ``({prefix}_id, {prefix}_vec, bucket)``.
+
+    Table ``t``'s key is ``f"{t}:{bits}"``, ``bits`` the sign of each
+    hyperplane dot product (``"1"`` when > 0), in plane order; keys come
+    table by table. With ``n_extra > 0`` each table's base key is followed
+    by ``n_extra`` radius-1 probes, each flipping one bit, in order of
+    |margin| ascending with bit-index tie-break — so the md5 family
+    replays the whole key list in SQL. Keys are computed in a vectorized
+    pandas UDF (Arrow-batched); the base path (``n_extra == 0``) does no
+    per-row margin sort."""
+    from pyspark.sql.functions import pandas_udf
+
+    num_tables, num_bits = planes.shape[:2]
+
+    @pandas_udf("array<string>")
+    def keys(vecs: pd.Series) -> pd.Series:
+        m = np.stack(vecs.to_numpy())  # (n, dim)
+        dots_all = [m @ planes[t].T for t in range(num_tables)]
+        bits_all = [d > 0 for d in dots_all]
+        out = []
+        for i in range(m.shape[0]):
+            ks = []
+            for t in range(num_tables):
+                bits = bits_all[t][i]
+                base = "".join("1" if b else "0" for b in bits)
+                ks.append(f"{t}:{base}")
+                if n_extra:
+                    order = np.lexsort((np.arange(num_bits), np.abs(dots_all[t][i])))
+                    for j in order[:n_extra]:
+                        flipped = base[:j] + ("0" if bits[j] else "1") + base[j + 1 :]
+                        ks.append(f"{t}:{flipped}")
+            out.append(ks)
+        return pd.Series(out)
+
+    pvec = f"{prefix}_vec"
+    return df.select(
+        F.col(id_col).alias(f"{prefix}_id"),
+        F.col(vec_col).cast("array<double>").alias(pvec),
+    ).withColumn("bucket", F.explode(keys(F.col(pvec))))
+
+
+def _sign_lsh_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    planes: np.ndarray,
+    probes: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The sign-LSH candidate pipeline: corpus base buckets meet the
+    broadcast query buckets (base + ``probes`` radius-1 probes per table),
+    candidates are deduped per (query, neighbor) and ranked exactly."""
+    cb = sign_buckets(corpus, planes, "neighbor", 0, id_col, vec_col)
+    qb = sign_buckets(queries, planes, "query", probes, id_col, vec_col)
+    # overlapping LSH tables DO need the pair dedup — but partitioning
+    # the candidate stream by query_id FIRST lets one exchange serve
+    # both the dedup (HashPartitioning(query_id) satisfies
+    # ClusteredDistribution(query_id, neighbor_id) — subset key) and the
+    # downstream per-query top-k window: 2 exchanges → 1 (guide §2.4,
+    # same-key operations share one exchange; r13 bracket: 5→4
+    # exchanges, wall neutral-to-better at sf0.1). Trade-off, priced:
+    # the single exchange carries the RAW pair stream (the old dedup
+    # exchange ran a map-side partial aggregate first), inflating bytes
+    # by the pair-duplication factor — bounded by num_tables·(1+probes),
+    # and ≈1 for sparse LSH; the old plan shipped the deduped pairs
+    # TWICE, so the crossover is dup_factor ≈ 2 and fewer stages wins
+    # the block-count game (§2.2) below it. Per-query skew exposure is
+    # unchanged — the top-k window already collapsed each query to one
+    # task.
+    cand = (
+        cb.join(F.broadcast(qb), "bucket")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .repartition("query_id")
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+    sim = cosine_sim(F.col("query_vec"), F.col("neighbor_vec"))
+    return neighbor_topk(cand.select("query_id", "neighbor_id", sim.alias("sim")), k)
+
+
 def lsh_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -139,81 +372,20 @@ def lsh_cosine_topk(
 ) -> DataFrame:
     """Approximate top-k cosine via random-hyperplane (sign) LSH.
 
-    Bucket key per table = sign bits of hyperplane dot products (computed in
-    a vectorized pandas UDF, Arrow-batched). Corpus and queries are bucketed
-    identically; the join shuffles on (table, bucket) only — at 100 TB no
+    Bucket key per table = sign bits of hyperplane dot products
+    (:func:`sign_buckets`). Corpus and queries are bucketed identically;
+    candidates only meet within a (table, bucket) key — at 100 TB no
     vector ever meets more than its bucket peers. Exact cosine re-ranks
-    candidates; recall < 1 by construction, tuned by (num_bits, num_tables).
+    candidates; recall < 1 by construction, tuned by (num_bits,
+    num_tables).
 
     ``dim`` is required (callers know it from the schema) so composing the
     plan triggers ZERO Spark jobs — no eager ``first()`` sniff at build
     time. ``plane_source``: ``"gaussian"`` (seeded, the default) or
     ``"md5"`` (hash-derived, SQL-replayable — the oracle-gated variant).
     """
-    from pyspark.sql.functions import pandas_udf
-
-    if plane_source == "md5":
-        planes = _md5_planes(dim, num_bits, num_tables)
-    else:
-        planes = _hyperplanes(dim, num_bits, num_tables, seed)
-
-    @pandas_udf("array<string>")
-    def bucket_keys(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (n, dim)
-        keys = []
-        bits_all = [(m @ planes[t].T) > 0 for t in range(num_tables)]
-        for i in range(m.shape[0]):
-            keys.append(
-                [
-                    f"{t}:" + "".join("1" if b else "0" for b in bits_all[t][i])
-                    for t in range(num_tables)
-                ]
-            )
-        return pd.Series(keys)
-
-    def with_buckets(df: DataFrame, prefix: str) -> DataFrame:
-        v = F.col(vec_col).cast("array<double>")
-        return df.select(
-            F.col(id_col).alias(f"{prefix}_id"), v.alias(f"{prefix}_vec")
-        ).withColumn("bucket", F.explode(bucket_keys(F.col(f"{prefix}_vec"))))
-
-    cb = with_buckets(corpus, "neighbor")
-    qb = with_buckets(queries, "query")
-    # overlapping LSH tables DO need the pair dedup — but partitioning
-    # the candidate stream by query_id FIRST lets one exchange serve
-    # both the dedup (HashPartitioning(query_id) satisfies
-    # ClusteredDistribution(query_id, neighbor_id) — subset key) and the
-    # downstream per-query top-k window: 2 exchanges → 1 (guide §2.4,
-    # same-key operations share one exchange; r13 bracket: 5→4
-    # exchanges, wall neutral-to-better at sf0.1). Trade-off, priced:
-    # the single exchange carries the RAW pair stream (the old dedup
-    # exchange ran a map-side partial aggregate first), inflating bytes
-    # by the pair-duplication factor — bounded by num_tables, and ≈1 for
-    # sparse LSH; the old plan shipped the deduped pairs TWICE, so the
-    # crossover is dup_factor ≈ 2 and fewer stages wins the block-count
-    # game (§2.2) below it. Per-query skew exposure is unchanged — the
-    # top-k window already collapsed each query to one task.
-    cand = (
-        cb.join(F.broadcast(qb), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .repartition("query_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    sim = cosine_sim(F.col("query_vec"), F.col("neighbor_vec"))
-    scored = cand.select("query_id", "neighbor_id", sim.alias("sim"))
-    top = topk_per_group(
-        scored,
-        partition_by=["query_id"],
-        order_by=[F.desc("sim"), F.col("neighbor_id")],
-        k=k,
-        rank_col="rnk",
-    )
-    return top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("sim"), 6).alias("cosine_sim"),
-        "rnk",
-    ).orderBy("query_id", "rnk")
+    planes = sign_planes(plane_source, dim, num_bits, num_tables, seed)
+    return _sign_lsh_topk(corpus, queries, k, planes, 0, id_col, vec_col)
 
 
 def _sq8_train(corpus: DataFrame, vec_col: str, dim: int) -> tuple[Column, Column]:
@@ -296,31 +468,10 @@ def sq8_cosine_topk(
     """
     cvec = F.col(vec_col).cast("array<double>")
     dequant = _sq8_dequant_expr(cvec, _sq8_train(corpus, vec_col, dim))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), dequant.alias("nv")
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), dequant.alias("nv"))
+    return neighbor_topk(
+        broadcast_scores(c, _as_queries(queries, id_col, vec_col)), k
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), cvec.alias("qv")
-    )
-    sim = cosine_sim(F.col("qv"), F.col("nv"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim"))
-    )
-    top = topk_per_group(
-        scored,
-        partition_by=["query_id"],
-        order_by=[F.desc("sim"), F.col("neighbor_id")],
-        k=k,
-        rank_col="rnk",
-    )
-    return top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("sim"), 6).alias("cosine_sim"),
-        "rnk",
-    ).orderBy("query_id", "rnk")
 
 
 def ivf_cosine_topk(
@@ -351,11 +502,11 @@ def ivf_cosine_topk(
     public ANN literature (e.g. FAISS's IVFFlat design), expressed as
     DataFrame ops.
     """
-    cvec = F.col(vec_col).cast("array<double>")
     if centroids is None:
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
+        cvec = F.col(vec_col).cast("array<double>")
         train = corpus.select(array_to_vector(cvec).alias("features"))
         model = KMeans(k=nlist, seed=seed, maxIter=10, featuresCol="features").fit(train)
         spark = corpus.sparkSession
@@ -364,48 +515,9 @@ def ivf_cosine_topk(
             "list_id int, centroid array<double>",
         )
 
-    def nearest_lists(df: DataFrame, prefix: str, n_take: int) -> DataFrame:
-        scored = df.select(
-            F.col(id_col).alias(f"{prefix}_id"), cvec.alias(f"{prefix}_vec")
-        ).crossJoin(F.broadcast(centroids)).select(
-            f"{prefix}_id",
-            f"{prefix}_vec",
-            "list_id",
-            cosine_sim(F.col(f"{prefix}_vec"), F.col("centroid")).alias("csim"),
-        )
-        return topk_per_group(
-            scored,
-            partition_by=[f"{prefix}_id"],
-            order_by=[F.desc("csim"), F.col("list_id")],
-            k=n_take,
-            rank_col="_crnk",
-        ).select(f"{prefix}_id", f"{prefix}_vec", "list_id")
-
-    lists = nearest_lists(corpus, "neighbor", 1)          # inverted lists
-    probes = nearest_lists(queries, "query", nprobe)      # probed lists
-    # no pair dedup: the corpus assignment is top-1, so each neighbor
-    # lives in EXACTLY one inverted list and a (query, neighbor) pair can
-    # materialize at most once — a distinct here would shuffle the whole
-    # candidate stream on (query_id, neighbor_id) for nothing (guide
-    # §2.4: a distinct on already-unique data). The overlapping-bucket
-    # LSH paths keep theirs.
-    cand = lists.join(F.broadcast(probes), "list_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    sim = cosine_sim(F.col("query_vec"), F.col("neighbor_vec"))
-    top = topk_per_group(
-        cand.select("query_id", "neighbor_id", sim.alias("sim")),
-        partition_by=["query_id"],
-        order_by=[F.desc("sim"), F.col("neighbor_id")],
-        k=k,
-        rank_col="rnk",
-    )
-    return top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("sim"), 6).alias("cosine_sim"),
-        "rnk",
-    ).orderBy("query_id", "rnk")
+    lists = nearest_lists(corpus, centroids, 1, "neighbor", id_col, vec_col)
+    probes = nearest_lists(queries, centroids, nprobe, "query", id_col, vec_col)
+    return neighbor_topk(probed_scores(lists, probes, "neighbor_vec"), k)
 
 
 def ivf_sq8_cosine_topk(
@@ -441,77 +553,19 @@ def ivf_sq8_cosine_topk(
     """
     cvec = F.col(vec_col).cast("array<double>")
     dequant = _sq8_dequant_expr(cvec, _sq8_train(corpus, vec_col, dim))
-
-    def nearest_lists(df: DataFrame, prefix: str, n_take: int, payload: Column) -> DataFrame:
-        scored = df.select(
-            F.col(id_col).alias(f"{prefix}_id"), payload.alias(f"{prefix}_vec")
-        ).crossJoin(F.broadcast(centroids)).select(
-            f"{prefix}_id",
-            f"{prefix}_vec",
-            "list_id",
-            cosine_sim(F.col(f"{prefix}_vec"), F.col("centroid")).alias("csim"),
-        )
-        return topk_per_group(
-            scored,
-            partition_by=[f"{prefix}_id"],
-            order_by=[F.desc("csim"), F.col("list_id")],
-            k=n_take,
-            rank_col="_crnk",
-        ).select(f"{prefix}_id", f"{prefix}_vec", "list_id")
-
     # inverted lists: assignment by the FULL vector (build-time exactness),
     # per-list payload = the dequantized SQ8 code vector (the stored form)
-    lists = nearest_lists(corpus, "neighbor", 1, payload=cvec).select(
-        "neighbor_id", "list_id"
-    ).join(
-        corpus.select(F.col(id_col).alias("neighbor_id"), dequant.alias("nv_q")),
-        "neighbor_id",
-    )
-    probes = nearest_lists(queries, "query", nprobe, payload=cvec)
-    # no pair dedup: top-1 corpus assignment ⇒ one list per neighbor ⇒
-    # (query, neighbor) pairs are already distinct (see ivf_cosine_topk)
-    approx = (
-        lists.join(F.broadcast(probes), "list_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
+    lists = (
+        nearest_lists(corpus, centroids, 1, "neighbor", id_col, vec_col)
+        .select("neighbor_id", "list_id")
+        .join(
+            corpus.select(F.col(id_col).alias("neighbor_id"), dequant.alias("nv_q")),
             "neighbor_id",
-            cosine_sim(F.col("query_vec"), F.col("nv_q")).alias("asim"),
         )
     )
-    shortlist = topk_per_group(
-        approx,
-        partition_by=["query_id"],
-        order_by=[F.desc("asim"), F.col("neighbor_id")],
-        k=rerank,
-        rank_col="_arnk",
-    ).select("query_id", "neighbor_id")
-    # full-precision re-rank: the tiny shortlist broadcasts against the
-    # full-precision table; the corpus side streams map-side
-    full = corpus.select(F.col(id_col).alias("neighbor_id"), cvec.alias("nv"))
-    q = queries.select(F.col(id_col).alias("query_id"), cvec.alias("qv"))
-    exact = (
-        full.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("qv"), F.col("nv")).alias("sim"),
-        )
-    )
-    top = topk_per_group(
-        exact,
-        partition_by=["query_id"],
-        order_by=[F.desc("sim"), F.col("neighbor_id")],
-        k=k,
-        rank_col="rnk",
-    )
-    return top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("sim"), 6).alias("cosine_sim"),
-        "rnk",
-    ).orderBy("query_id", "rnk")
+    probes = nearest_lists(queries, centroids, nprobe, "query", id_col, vec_col)
+    approx = probed_scores(lists, probes, "nv_q")
+    return exact_rerank(approx, corpus, queries, k, rerank, id_col, vec_col)
 
 
 def lsh_multiprobe_topk(
@@ -543,76 +597,10 @@ def lsh_multiprobe_topk(
 
     Deterministic probe order: |margin| ascending with bit-index
     tie-break, so the md5 plane family replays the whole candidate set in
-    SQL (the oracle-gated variant).
+    SQL (the oracle-gated variant). The pipeline is
+    :func:`lsh_cosine_topk`'s with the query-side probes added.
     """
-    from pyspark.sql.functions import pandas_udf
-
     if not 0 < probes < num_bits:
         raise ValueError(f"probes must be in (0, {num_bits}), got {probes}")
-    if plane_source == "md5":
-        planes = _md5_planes(dim, num_bits, num_tables)
-    else:
-        planes = _hyperplanes(dim, num_bits, num_tables, seed)
-
-    def _keys_udf(n_extra: int):
-        @pandas_udf("array<string>")
-        def keys(vecs: pd.Series) -> pd.Series:
-            m = np.stack(vecs.to_numpy())
-            out = []
-            dots_all = [m @ planes[t].T for t in range(num_tables)]
-            for i in range(m.shape[0]):
-                ks = []
-                for t in range(num_tables):
-                    dots = dots_all[t][i]
-                    bits = dots > 0
-                    base = "".join("1" if b else "0" for b in bits)
-                    ks.append(f"{t}:{base}")
-                    # radius-1 probes: flip the n_extra lowest-|margin|
-                    # bits, one at a time (|margin| asc, bit-index asc)
-                    order = np.lexsort((np.arange(num_bits), np.abs(dots)))
-                    for j in order[:n_extra]:
-                        flipped = (
-                            base[:j]
-                            + ("0" if bits[j] else "1")
-                            + base[j + 1 :]
-                        )
-                        ks.append(f"{t}:{flipped}")
-                out.append(ks)
-            return pd.Series(out)
-
-        return keys
-
-    def with_buckets(df: DataFrame, prefix: str, n_extra: int) -> DataFrame:
-        v = F.col(vec_col).cast("array<double>")
-        return df.select(
-            F.col(id_col).alias(f"{prefix}_id"), v.alias(f"{prefix}_vec")
-        ).withColumn(
-            "bucket", F.explode(_keys_udf(n_extra)(F.col(f"{prefix}_vec")))
-        )
-
-    cb = with_buckets(corpus, "neighbor", 0)  # base buckets only
-    qb = with_buckets(queries, "query", probes)
-    # same subset-key exchange share as lsh_cosine_topk: partition by
-    # query_id once; the (query, neighbor) dedup and the per-query
-    # top-k window both run on that single exchange (guide §2.4)
-    cand = (
-        cb.join(F.broadcast(qb), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .repartition("query_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    sim = cosine_sim(F.col("query_vec"), F.col("neighbor_vec"))
-    scored = cand.select("query_id", "neighbor_id", sim.alias("sim"))
-    top = topk_per_group(
-        scored,
-        partition_by=["query_id"],
-        order_by=[F.desc("sim"), F.col("neighbor_id")],
-        k=k,
-        rank_col="rnk",
-    )
-    return top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("sim"), 6).alias("cosine_sim"),
-        "rnk",
-    ).orderBy("query_id", "rnk")
+    planes = sign_planes(plane_source, dim, num_bits, num_tables, seed)
+    return _sign_lsh_topk(corpus, queries, k, planes, probes, id_col, vec_col)

@@ -21,8 +21,11 @@ ivf_cosine_topk(corpus, Q, centroids=C)`` — the blocking is the same, only
 WHEN the corpus side is scored differs (admission vs query time). Tested,
 and the registered gate reuses the scratch path's oracle verbatim.
 
-Kept separate from `similarity/ann.py` so the serving path can evolve
-without drifting the certified batch operators.
+The probe, the candidate scoring and the ranking tail are the shared
+helpers of `similarity/ann.py` (:func:`ann.nearest_lists`,
+:func:`ann.probed_scores`, :func:`ann.neighbor_topk`) — the same calls
+``ivf_cosine_topk`` makes — so the two paths cannot drift apart; only
+the source of the corpus-side list ids differs.
 """
 
 from __future__ import annotations
@@ -30,8 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from backend_big_data_spark.operators.windows import topk_per_group
-from backend_big_data_spark.similarity.ann import cosine_sim
+from backend_big_data_spark.similarity.ann import (
+    nearest_lists,
+    neighbor_topk,
+    probed_scores,
+)
 
 
 def assign_lists(
@@ -45,24 +51,9 @@ def assign_lists(
     the smaller ``list_id`` — the same deterministic order as the scratch
     path). This is the one corpus × centroids pass; it runs once per
     admitted batch in the streaming sink, never on the query path."""
-    cvec = F.col(vec_col).cast("array<double>")
-    scored = (
-        corpus.select(F.col(id_col), cvec.alias("vec"))
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            id_col,
-            "vec",
-            "list_id",
-            cosine_sim(F.col("vec"), F.col("centroid")).alias("csim"),
-        )
+    return nearest_lists(corpus, centroids, 1, "x", id_col, vec_col).select(
+        F.col("x_id").alias(id_col), F.col("x_vec").alias("vec"), "list_id"
     )
-    return topk_per_group(
-        scored,
-        partition_by=[id_col],
-        order_by=[F.desc("csim"), F.col("list_id")],
-        k=1,
-        rank_col="_arnk",
-    ).select(id_col, "vec", "list_id")
 
 
 def ivf_maintained_topk(
@@ -80,52 +71,16 @@ def ivf_maintained_topk(
     is a plain scan + one broadcast hash join on ``list_id`` — no
     centroid scoring, no per-vector window (plan-tested); only the tiny
     query side scores centroids to pick its ``nprobe`` lists."""
-    cvec = F.col(vec_col).cast("array<double>")
-    qscored = (
-        queries.select(F.col(id_col).alias("query_id"), cvec.alias("query_vec"))
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "query_vec",
-            "list_id",
-            cosine_sim(F.col("query_vec"), F.col("centroid")).alias("csim"),
-        )
+    probes = nearest_lists(queries, centroids, nprobe, "query", id_col, vec_col)
+    # ``assigned`` is an inverted-list table: one list per id
+    # (assign_lists is a top-1; the embedding sink stores one cluster per
+    # vector), which is what probed_scores' no-dedup join relies on
+    lists = assigned.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col("vec").alias("neighbor_vec"),
+        "list_id",
     )
-    probes = topk_per_group(
-        qscored,
-        partition_by=["query_id"],
-        order_by=[F.desc("csim"), F.col("list_id")],
-        k=nprobe,
-        rank_col="_prnk",
-    ).select("query_id", "query_vec", "list_id")
-    # no pair dedup: ``assigned`` is an inverted-list table — one list
-    # per id (assign_lists is a top-1 argmin; the embedding sink stores
-    # one cluster per vector) — so (query, neighbor) pairs are already
-    # distinct and a distinct here would shuffle the whole candidate
-    # stream on (query_id, neighbor_id) for nothing (guide §2.4)
-    cand = (
-        assigned.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col("vec").alias("neighbor_vec"),
-            "list_id",
-        )
-        .join(F.broadcast(probes), "list_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    sim = cosine_sim(F.col("query_vec"), F.col("neighbor_vec"))
-    top = topk_per_group(
-        cand.select("query_id", "neighbor_id", sim.alias("sim")),
-        partition_by=["query_id"],
-        order_by=[F.desc("sim"), F.col("neighbor_id")],
-        k=k,
-        rank_col="rnk",
-    )
-    return top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("sim"), 6).alias("cosine_sim"),
-        "rnk",
-    ).orderBy("query_id", "rnk")
+    return neighbor_topk(probed_scores(lists, probes, "neighbor_vec"), k)
 
 
 __all__ = ["assign_lists", "ivf_maintained_topk"]

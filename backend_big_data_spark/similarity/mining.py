@@ -25,24 +25,26 @@ extends the ANN family of `similarity/ann.py`):
 Scale design: the exact all-pairs form is the correctness baseline and is
 capped (``pair_cap`` + ``MarginMiningBlowup``) exactly like the linkage
 family's sizing rules — at 100 TB the production path is
-``margin_knn_pairs_lsh``, which generates candidates through the same
-sign-LSH bucketing as `ann.lsh_cosine_topk` (candidates only meet inside
-a (table, bucket) key; the pair frame is candidate-sized, never |A|·|B|)
-and computes the SAME margin over each vector's candidate neighborhood —
-the approximation CCMatrix itself makes (margins over FAISS shortlists).
+``margin_knn_pairs_lsh``, which generates candidates with the shared
+sign-LSH kernel of `similarity/ann.py` (:func:`ann.sign_planes`,
+:func:`ann.sign_buckets`: candidates only meet inside a (table, bucket)
+key; the pair frame is candidate-sized, never |A|·|B|) and computes the
+SAME margin over each vector's candidate neighborhood — the
+approximation CCMatrix itself makes (margins over FAISS shortlists).
 Every downstream stage shuffles keyed on a_id / b_id only.
+:func:`margin_scores` is also the scorer of the streaming margin linker
+(`streaming/margin_ingest.py`).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from backend_big_data_spark.similarity.ann import (
-    _hyperplanes,
-    _md5_planes,
     cosine_sim,
+    sign_buckets,
+    sign_planes,
 )
 
 
@@ -52,7 +54,7 @@ class MarginMiningBlowup(RuntimeError):
     regime where the LSH-candidate form is the correct tool."""
 
 
-def _margin_scores(pairs: DataFrame, k: int) -> DataFrame:
+def margin_scores(pairs: DataFrame, k: int) -> DataFrame:
     """Ratio-margin scores over a candidate-pair frame.
 
     ``pairs`` carries (a_id, b_id, sim). Top-k neighborhood means are
@@ -101,12 +103,12 @@ def _margin_best_matches(
     pairs: DataFrame, k: int, threshold: float, mutual: bool
 ) -> DataFrame:
     """Mutual (or A-side) best matches above ``threshold`` over
-    :func:`_margin_scores`.
+    :func:`margin_scores`.
 
     The b_id-keyed best window runs FIRST: the scored frame arrives
-    partitioned by b_id (db is the last window in `_margin_scores`), so
+    partitioned by b_id (db is the last window in `margin_scores`), so
     bb needs no new exchange and ba pays the only one (guide §2.4)."""
-    scored = _margin_scores(pairs, k)
+    scored = margin_scores(pairs, k)
     best = scored
     keep = F.col("mkey") >= threshold
     if mutual:
@@ -176,38 +178,6 @@ def margin_knn_pairs(
     return _margin_best_matches(pairs, k=k, threshold=threshold, mutual=mutual)
 
 
-def _bucketed(
-    df: DataFrame, prefix: str, planes, id_col: str, vec_col: str
-) -> DataFrame:
-    """Explode a frame to one row per (vector, table-bucket key) using the
-    given sign-LSH planes — same bucketing contract as ann.lsh_cosine_topk
-    (vectorized pandas UDF, Arrow-batched; key = "t:bits")."""
-    from pyspark.sql.functions import pandas_udf
-
-    num_tables = planes.shape[0]
-
-    @pandas_udf("array<string>")
-    def bucket_keys(vecs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        m = np.stack(vecs.to_numpy())
-        bits_all = [(m @ planes[t].T) > 0 for t in range(num_tables)]
-        return pd.Series(
-            [
-                [
-                    f"{t}:" + "".join("1" if b else "0" for b in bits_all[t][i])
-                    for t in range(num_tables)
-                ]
-                for i in range(m.shape[0])
-            ]
-        )
-
-    v = F.col(vec_col).cast("array<double>")
-    return df.select(
-        F.col(id_col).alias(f"{prefix}_id"), v.alias(f"{prefix}v")
-    ).withColumn("bucket", F.explode(bucket_keys(F.col(f"{prefix}v"))))
-
-
 def margin_knn_pairs_lsh(
     side_a: DataFrame,
     side_b: DataFrame,
@@ -225,27 +195,24 @@ def margin_knn_pairs_lsh(
 ) -> DataFrame:
     """Margin pair mining over sign-LSH candidate pairs — the 100 TB path.
 
-    Candidates are generated exactly as in ``ann.lsh_cosine_topk``: both
-    sides bucket under the same hyperplane family; a pair exists iff the
-    two vectors share a (table, bucket) key. The margin is then computed
+    Candidates come from :func:`ann.sign_buckets`: both sides bucket
+    under the same hyperplane family; a pair exists iff the two vectors
+    share a (table, bucket) key. The margin is then computed
     within each vector's CANDIDATE neighborhood (top-k among candidates) —
     the same shortlist approximation CCMatrix makes over FAISS indexes.
     Neither side is broadcast: the candidate join shuffles keyed on the
     bucket, every later stage on a_id / b_id. ``plane_source="md5"`` keys
     buckets off hash-derived plane doubles an SQL engine reproduces
-    bit-for-bit (see ann._md5_planes), making the whole mine SQL-replayable.
+    bit-for-bit (see ann.sign_planes), making the whole mine SQL-replayable.
     """
-    if plane_source == "md5":
-        planes = _md5_planes(dim, num_bits, num_tables)
-    else:
-        planes = _hyperplanes(dim, num_bits, num_tables, seed)
-    ab = _bucketed(side_a, "a", planes, id_col, vec_col)
-    bb = _bucketed(side_b, "b", planes, id_col, vec_col)
+    planes = sign_planes(plane_source, dim, num_bits, num_tables, seed)
+    ab = sign_buckets(side_a, planes, "a", id_col=id_col, vec_col=vec_col)
+    bb = sign_buckets(side_b, planes, "b", id_col=id_col, vec_col=vec_col)
     pairs = (
         ab.join(bb, "bucket")
         .dropDuplicates(["a_id", "b_id"])
         .select(
-            "a_id", "b_id", cosine_sim(F.col("av"), F.col("bv")).alias("sim")
+            "a_id", "b_id", cosine_sim(F.col("a_vec"), F.col("b_vec")).alias("sim")
         )
     )
     return _margin_best_matches(pairs, k=k, threshold=threshold, mutual=mutual)

@@ -4,9 +4,10 @@ in-batch-negatives refinement, Karpukhin et al. 2020, arXiv:2004.04906
 corpus items that do NOT share its label — the near-misses a bi-encoder
 must learn to push away, which train far better than random negatives.
 
-Plan shape = the brute-force ANN scorer with a label-mismatch predicate:
-anchors broadcast, corpus streams map-side (no corpus shuffle), per-anchor
-top-k via one keyed window. For corpus-scale anchor sets, swap the
+Plan shape = the brute-force ANN scorer (`ann.broadcast_scores`) with a
+label predicate: anchors broadcast, corpus streams map-side (no corpus
+shuffle), per-anchor top-k via one keyed window (`ann.rank_neighbors`,
+the shared ranking tail without the final sort). For corpus-scale anchor sets, swap the
 brute-force scorer for any of the sub-linear ANN paths (IVF / LSH / PQ in
 `similarity/ann.py` + `similarity/pq.py`) and keep the label filter — the
 predicate composes with every candidate generator.
@@ -17,8 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from backend_big_data_spark.operators.windows import topk_per_group
-from backend_big_data_spark.similarity.ann import cosine_sim
+from backend_big_data_spark.similarity.ann import broadcast_scores, rank_neighbors
 
 
 def label_matched_topk(
@@ -37,12 +37,12 @@ def label_matched_topk(
     tie-break."""
     q = anchors.select(
         F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
+        F.col(vec_col).cast("array<double>").alias("qv"),
         F.col(label_col).alias("__ql"),
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__nv"),
+        F.col(vec_col).cast("array<double>").alias("nv"),
         F.col(label_col).alias("__nl"),
     )
     label_pred = (
@@ -50,28 +50,7 @@ def label_matched_topk(
         if same_label
         else F.col("__nl") != F.col("__ql")
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(label_pred)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("__qv"), F.col("__nv")).alias("sim"),
-        )
-    )
-    top = topk_per_group(
-        scored,
-        partition_by=["query_id"],
-        order_by=[F.desc("sim"), F.col("neighbor_id")],
-        k=k,
-    )
-    return top.select(
-        "query_id",
-        "neighbor_id",
-        F.round("sim", 6).alias("cosine_sim"),
-        F.col("rnk"),
-    )
+    return rank_neighbors(broadcast_scores(c, q, where=label_pred), k)
 
 
 def hard_negatives(

@@ -21,9 +21,15 @@ Scale notes:
 - squared-L2 to each code is an 8-element fold in whole-stage codegen;
   both engines sum left-to-right over the same doubles, so argmin ties
   cannot diverge (and ties proper break on code_id);
-- ADC search here is the exhaustive form (every vector's reconstruction is
-  scored); compose with IVF lists exactly like ``ivf_sq8_cosine_topk``
-  for the sub-linear path — the encode/decode contract is identical.
+- ``pq_cosine_topk`` is the exhaustive ADC form (every vector's
+  reconstruction is scored); ``ivf_pq_cosine_topk`` is the sub-linear
+  form over IVF lists of residual codes.
+
+Both rank, probe and re-rank through the shared ANN helpers of
+`similarity/ann.py` (:func:`ann.neighbor_topk`, :func:`ann.nearest_lists`,
+:func:`ann.exact_rerank`), so their output contract is the one every ANN
+entry point has. Only the corpus→list assignment of ``ivf_pq`` is its
+own: an argmax hash aggregate instead of the top-1 window.
 """
 
 from __future__ import annotations
@@ -31,8 +37,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from backend_big_data_spark.operators.windows import topk_per_group
-from backend_big_data_spark.similarity.ann import cosine_sim
+from backend_big_data_spark.similarity.ann import (
+    broadcast_scores,
+    cosine_sim,
+    exact_rerank,
+    nearest_lists,
+    neighbor_topk,
+    probed_scores,
+)
+
+
+def _sub_width(dim: int, m: int) -> int:
+    if dim % m:
+        raise ValueError(f"dim={dim} must divide into m={m} equal subspaces")
+    return dim // m
 
 
 def _sq_l2(a: Column, b: Column) -> Column:
@@ -146,8 +164,7 @@ def pq_cosine_topk(
     corpus vectors by cosine, tie-break on neighbor id. Same output
     contract as the other ANN entry points (query_id, neighbor_id,
     cosine_sim[6dp], rnk)."""
-    assert dim % m == 0, "dim must divide into m equal subspaces"
-    d_sub = dim // m
+    d_sub = _sub_width(dim, m)
     if codebooks is None:
         codebooks = anchor_codebooks(
             corpus, m=m, d_sub=d_sub, ksub=ksub, id_col=id_col, vec_col=vec_col
@@ -160,38 +177,7 @@ def pq_cosine_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    scored = (
-        recon.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("qv"), F.col("nv")).alias("sim"),
-        )
-    )
-    top = topk_per_group(
-        scored,
-        partition_by=["query_id"],
-        order_by=[F.desc("sim"), F.col("neighbor_id")],
-        k=k,
-        rank_col="rnk",
-    )
-    return top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("sim"), 6).alias("cosine_sim"),
-        "rnk",
-    ).orderBy("query_id", "rnk")
-
-
-__all__ = [
-    "anchor_codebooks",
-    "ivf_pq_cosine_topk",
-    "pq_cosine_topk",
-    "pq_encode",
-    "pq_reconstruct",
-    "train_pq_codebooks",
-]
+    return neighbor_topk(broadcast_scores(recon, q), k)
 
 
 def ivf_pq_cosine_topk(
@@ -225,29 +211,8 @@ def ivf_pq_cosine_topk(
     is ``m`` nibble/byte codes + a list id; the re-rank ships only
     |queries|·rerank ids broadcast against the full-precision table.
     """
-    assert dim % m == 0
-    d_sub = dim // m
+    d_sub = _sub_width(dim, m)
     cvec = F.col(vec_col).cast("array<double>")
-
-    def nearest_lists(df: DataFrame, prefix: str, n_take: int) -> DataFrame:
-        scored = (
-            df.select(F.col(id_col).alias(f"{prefix}_id"), cvec.alias(f"{prefix}_vec"))
-            .crossJoin(F.broadcast(centroids))
-            .select(
-                f"{prefix}_id",
-                f"{prefix}_vec",
-                "list_id",
-                cosine_sim(F.col(f"{prefix}_vec"), F.col("centroid")).alias("csim"),
-            )
-        )
-        return topk_per_group(
-            scored,
-            partition_by=[f"{prefix}_id"],
-            order_by=[F.desc("csim"), F.col("list_id")],
-            k=n_take,
-            rank_col="_crnk",
-        ).select(f"{prefix}_id", f"{prefix}_vec", "list_id")
-
     # corpus→list assignment is a top-1: argmax via max(struct) hash
     # aggregate (map-side combine) instead of a window over the
     # |corpus|·nlist scored rows; (csim, −list_id) ordering ≡ the window's
@@ -301,50 +266,9 @@ def ivf_pq_cosine_topk(
             ),
         )
     )
-    probes = nearest_lists(queries, "query", nprobe)
-    # no pair dedup: the argmax assignment above puts each neighbor in
-    # EXACTLY one list, so (query, neighbor) pairs are already distinct —
-    # a distinct would shuffle the candidate stream for nothing (§2.4)
-    approx = (
-        recon.join(F.broadcast(probes), "list_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("query_vec"), F.col("nv_q")).alias("asim"),
-        )
-    )
-    shortlist = topk_per_group(
-        approx,
-        partition_by=["query_id"],
-        order_by=[F.desc("asim"), F.col("neighbor_id")],
-        k=rerank,
-        rank_col="_arnk",
-    ).select("query_id", "neighbor_id")
-    full = corpus.select(F.col(id_col).alias("neighbor_id"), cvec.alias("nv"))
-    q = queries.select(F.col(id_col).alias("query_id"), cvec.alias("qv"))
-    exact = (
-        full.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("qv"), F.col("nv")).alias("sim"),
-        )
-    )
-    top = topk_per_group(
-        exact,
-        partition_by=["query_id"],
-        order_by=[F.desc("sim"), F.col("neighbor_id")],
-        k=k,
-        rank_col="rnk",
-    )
-    return top.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("sim"), 6).alias("cosine_sim"),
-        "rnk",
-    ).orderBy("query_id", "rnk")
+    probes = nearest_lists(queries, centroids, nprobe, "query", id_col, vec_col)
+    approx = probed_scores(recon, probes, "nv_q")
+    return exact_rerank(approx, corpus, queries, k, rerank, id_col, vec_col)
 
 
 def train_pq_codebooks(
@@ -385,3 +309,13 @@ def train_pq_codebooks(
     return spark.createDataFrame(
         rows, "sub_id int, code_id int, codevec array<double>"
     )
+
+
+__all__ = [
+    "anchor_codebooks",
+    "ivf_pq_cosine_topk",
+    "pq_cosine_topk",
+    "pq_encode",
+    "pq_reconstruct",
+    "train_pq_codebooks",
+]

@@ -6,9 +6,9 @@ distances/angles while cutting vector width (the cheap precursor to the
 ANN paths in similarity/ann.py: project once at rest, search in k dims,
 re-rank survivors at full width).
 
-The matrix reuses ann._md5_planes' hash-derived family: entry (j, i) is a
-pure function of md5("0:j:i"), so the projection is deterministic across
-engines — the DuckDB oracle derives the identical doubles from the same
+The matrix reuses the md5 plane family of ann.sign_planes: entry (j, i)
+is a pure function of md5("0:j:i"), so the projection is deterministic
+across engines — the DuckDB oracle derives the identical doubles from the same
 formula, like the LSH oracle does. The projection itself is a pure column
 expression (one dot product per output dim, JVM-side) — no shuffle, no
 Python; at 100 TB this is a map-only rewrite of the embedding table.
@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from backend_big_data_spark.similarity.ann import _md5_planes
+from backend_big_data_spark.similarity.ann import sign_planes
 
 
 def project_embeddings(
@@ -38,7 +38,7 @@ def project_embeddings(
 
     import math
 
-    planes = _md5_planes(dim, out_dims, 1)[0]  # (out_dims, dim)
+    planes = sign_planes("md5", dim, out_dims, 1)[0]  # (out_dims, dim)
     v = F.col(vec_col).cast("array<double>")
 
     def dot_row(j: int) -> Column:

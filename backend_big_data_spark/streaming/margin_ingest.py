@@ -14,7 +14,7 @@ master entity table at ``master_dir``:
    admission: the master is never re-hashed (the linkage family's
    maintained-index discipline). Candidates get exact cosines, ratio
    margins over each record's candidate shortlist
-   (`mining._margin_scores` — the streaming hubness estimate is
+   (`mining.margin_scores` — the streaming hubness estimate is
    batch-local on the master side, candidate-local on the batch side),
    and each record emits its ``link_k`` best masters with margin ≥
    ``threshold``, deterministically (9-dp margin key, master-id
@@ -49,8 +49,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from backend_big_data_spark.similarity.ann import _md5_planes, cosine_sim
-from backend_big_data_spark.similarity.mining import _bucketed, _margin_scores
+from backend_big_data_spark.similarity.ann import (
+    cosine_sim,
+    sign_buckets,
+    sign_planes,
+)
+from backend_big_data_spark.similarity.mining import margin_scores
 from backend_big_data_spark.streaming.maintenance import (
     fold,
     read_covering,
@@ -77,10 +81,10 @@ def bucket_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The (id, bucket) sign-LSH index of a master frame — md5-derived
-    plane family (SQL-replayable, `ann._md5_planes`), one row per
+    plane family (SQL-replayable, `ann.sign_planes`), one row per
     (record, table)."""
-    planes = _md5_planes(dim, num_bits, num_tables)
-    return _bucketed(df, "x", planes, id_col, vec_col).select(
+    planes = sign_planes("md5", dim, num_bits, num_tables)
+    return sign_buckets(df, planes, "x", id_col=id_col, vec_col=vec_col).select(
         F.col("x_id").alias("id"), "bucket"
     )
 
@@ -161,15 +165,15 @@ def margin_link_batch(
     ranks and margins are unaffected."""
     if master is None or master_buckets is None:
         return batch.sparkSession.createDataFrame([], _EMPTY_LINKS)
-    planes = _md5_planes(dim, num_bits, num_tables)
-    ab = _bucketed(batch, "a", planes, "id", "embedding")
+    planes = sign_planes("md5", dim, num_bits, num_tables)
+    ab = sign_buckets(batch, planes, "a", id_col="id")
     cand = (
         ab.join(
             master_buckets.select(F.col("id").alias("b_id"), "bucket"),
             "bucket",
         )
         .dropDuplicates(["a_id", "b_id"])
-        .select("a_id", "b_id", "av")
+        .select("a_id", "b_id", "a_vec")
     )
     pairs = cand.join(
         master.select(
@@ -177,8 +181,8 @@ def margin_link_batch(
             F.col("embedding").cast("array<double>").alias("bv"),
         ),
         "b_id",
-    ).select("a_id", "b_id", cosine_sim(F.col("av"), F.col("bv")).alias("sim"))
-    scored = _margin_scores(pairs, knn_k)
+    ).select("a_id", "b_id", cosine_sim(F.col("a_vec"), F.col("bv")).alias("sim"))
+    scored = margin_scores(pairs, knn_k)
     w = Window.partitionBy("a_id").orderBy(F.desc("mkey"), F.col("b_id"))
     keep = (F.col("rank") <= link_k) & (F.col("mkey") >= threshold)
     if min_sim is not None:

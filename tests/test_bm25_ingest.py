@@ -246,9 +246,17 @@ class TestTermBucketedFold:
         unions the mixed layout (flat tail scanned, bulk pruned) and the
         next compaction re-buckets everything at the sticky width."""
         idir = str(tmp_path / "ix")
-        _ingest(spark, idir, [DOCS[:3]])
+        # two batches: a fold needs two dirs to build the bucketed bulk
+        _ingest(spark, idir, [DOCS[:2], DOCS[2:4]])
         compact_bm25_index(spark, idir, keep_latest=0, term_buckets=4)
-        bm25_ingest_sink(idir)(_df(spark, DOCS[3:]), 1)  # flat tail
+        bm25_ingest_sink(idir)(_df(spark, DOCS[4:]), 2)  # flat tail
+        postings = f"{idir}/postings"
+        dirs = fsutil.list_subdirs(spark, postings, prefix="batch=")
+        layout = {
+            d: bool(fsutil.list_subdirs(spark, f"{postings}/{d}", prefix="__tb="))
+            for d in dirs
+        }
+        assert layout == {"batch=0": True, "batch=2": False}, layout
         got = _rows(bm25_topk_from_index(spark, idir, QUERY, k=10))
         assert got == _rows(bm25_topk(_df(spark, DOCS), QUERY, k=10))
         compact_bm25_index(spark, idir, keep_latest=0)  # sticky width
